@@ -188,8 +188,8 @@ object AnnSql {
     }, "scala_udf")
 
     // ann_search(table_name, index_name, query_vec, k[, oversample]) →
-    // base-table rows fetched through the broadcast join-back (S3,
-    // reference convenience fn src/ann_search.cpp:31-195)
+    // base-table rows fetched by the hit ids (S3, reference convenience
+    // fn src/ann_search.cpp:31-195)
     r.createOrReplaceTempFunction("ann_search", (exprs: Seq[Expression]) => {
       require(exprs.length >= 4 && exprs.length <= 5,
         "usage: ann_search(table, index, query_vec, k[, oversample])")

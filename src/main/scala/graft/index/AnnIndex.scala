@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.types._
 
 import graft.functions.AnnFunctions._
@@ -567,11 +568,19 @@ class AnnIndex(val spark: SparkSession, val path: String) {
   }
 
   def scan(q: Array[Float], k: Int, searchParam: Int = -1): DataFrame = {
-    if (isGraphEngine)
-      return scanGraph(Seq((0, prepQuery(q))), k, searchParam)
-        .select("id", "_distance")
+    if (isGraphEngine) {
+      // one query needs no grouped merge shuffle: the per-shard candidates
+      // go straight into one ordered take (a single job over the scheduled
+      // partitions). With tombstones the batch path's k+|deleted| cut runs
+      // before the mask, so both paths keep the same survivors.
+      val (cands, kk) = graphCandidates(Seq((0, prepQuery(q))), k, searchParam)
+      val live =
+        if (hasDeletes) maskDead(cands.orderBy(col("_distance"), col("id")).limit(kk))
+        else cands
+      return live.select("id", "_distance")
         .orderBy(col("_distance"), col("id"))
         .limit(k)
+    }
     val qq = prepQuery(q)
     val np = if (searchParam > 0) searchParam else defaultNprobe
     val probed = pruneToLists(live, probeLists(qq, np, allowAdaptive = searchParam <= 0))
@@ -923,9 +932,20 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     }
   }
 
+  /** Batch graph search: the per-shard candidates merged to the top
+    * k+|deleted| per query (grouped top-k), then tombstone-cleaned to k. */
   private[graft] def scanGraph(qs: Seq[(Int, Array[Float])], k: Int,
                                searchComplexity: Int): DataFrame = {
+    val (cands, kk) = graphCandidates(qs, k, searchComplexity)
+    cleanGraphHits(TopK.grouped(cands, "query_idx", "_distance", "id", kk), "query_idx", k)
+  }
+
+  /** Unmerged (query_idx, id, _distance, seg) graph candidates for `qs`,
+    * searched with the tombstone overfetch kk = k + |deleted|, and kk. */
+  private def graphCandidates(qs: Seq[(Int, Array[Float])], k: Int,
+                              searchComplexity: Int): (DataFrame, Int) = {
     val overfetch = meta.numDeleted.toInt
+    val kk = k + overfetch
     val ck = shardCacheKey
     val (src, prePart) = pinnedSource
     val nShards = math.max(1, meta.param("shards", 1))
@@ -947,25 +967,26 @@ class AnnIndex(val spark: SparkSession, val path: String) {
         inv.iterator.map { case (sid, b) => sid -> b.toArray }.toMap
       }
     }
-    val pinParts = if (prePart) pinnedPartsVar else None
+    // a pin's hash layout leaves most partitions empty: an unrouted search
+    // schedules only those holding a live shard
+    val (pinParts, live) = if (prePart) (pinnedPartsVar, Some(liveShardIds)) else (None, None)
     val res = meta.engine match {
       case "DISKANN" =>
         val p = Vamana.Params.from(meta)
-        val l = Vamana.beamWidth(k + overfetch, searchComplexity,
-          p.buildComplexity) + overfetch
-        Vamana.searchBatch(spark, src, qs, k + overfetch, l, meta.metric, ck,
+        val l = Vamana.beamWidth(kk, searchComplexity, p.buildComplexity) + overfetch
+        Vamana.searchBatch(spark, src, qs, l, meta.metric, ck,
           prePartitioned = prePart, numShards = nShards, codec = codec,
-          probes = probes, pinnedParts = pinParts)
+          probes = probes, pinnedParts = pinParts, liveShards = live)
       case "HNSW" =>
         // searchParam = ef_search override; default ef = ef_construction
         val p = Hnsw.Params.from(meta)
-        val ef = math.max(k + overfetch,
+        val ef = math.max(kk,
           if (searchComplexity > 0) searchComplexity else p.efConstruction) + overfetch
-        Hnsw.searchBatch(spark, src, qs, k + overfetch, ef, meta.metric, ck,
+        Hnsw.searchBatch(spark, src, qs, kk, ef, meta.metric, ck,
           prePartitioned = prePart, numShards = nShards, codec = codec,
-          probes = probes, pinnedParts = pinParts)
+          probes = probes, pinnedParts = pinParts, liveShards = live)
     }
-    cleanGraphHits(res, "query_idx", k)
+    (res, kk)
   }
 
   /** Tombstone cleanup shared by the broadcast and distributed graph
@@ -1043,10 +1064,12 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     if (meta.engine == "FLAT" || lists.size >= centroids.length) df
     else df.filter(col("list_id").isin(lists: _*))
 
-  /** S3 `ann_search`: scan + fetch base columns + `_distance`, ordered.
-    * The row fetch-by-rowid becomes a broadcast join of the (≤ k·oversample)
-    * result set against the base table (reference: src/ann_search.cpp:31-195;
-    * oversample :123).
+  /** S3 `ann_search`: scan + fetch base columns + `_distance`, ordered by
+    * (`_distance`, base id). Plans to the same index-top-k node as the
+    * optimizer rewrite ([[graft.plans.AnnIndexTopK]]): a hits job of the
+    * top k·oversample from the index, then the rows fetched with a
+    * pushed-down `id IN (hits)` filter over `base` (reference:
+    * src/ann_search.cpp:31-195; oversample :123).
     *
     * @param rerank recompute `_distance` EXACTLY from the base table's raw
     *               float vectors after the fetch and re-sort (the faiss
@@ -1059,15 +1082,18 @@ class AnnIndex(val spark: SparkSession, val path: String) {
   def search(base: DataFrame, baseIdCol: String, q: Array[Float], k: Int,
              searchParam: Int = -1, oversample: Int = 1,
              rerank: Boolean = false): DataFrame = {
-    val hits = scan(q, k * math.max(1, oversample), searchParam)
-    val fetched = base.join(broadcast(hits), base(baseIdCol) === hits("id"))
-      .drop(hits("id")) // keep the base's own key even when also named "id"
-    val scored =
-      if (!rerank) fetched
-      else fetched.withColumn("_distance", rawDistColumn(
-        graft.functions.AnnFunctions.vector_nonnull(col(meta.vecCol)),
-        typedLit(prepQuery(q))))
-    scored.orderBy(col("_distance"), base(baseIdCol)).limit(k)
+    val plan = org.apache.spark.sql.GraftBridge.analyzedPlan(base)
+    val idOrdinal = org.apache.spark.sql.GraftBridge.expression(base(baseIdCol)) match {
+      case a: Attribute => plan.output.indexWhere(_.exprId == a.exprId)
+      case _ => -1
+    }
+    require(idOrdinal >= 0, s"search: $baseIdCol is not a column of the base")
+    val node = graft.plans.AnnIndexTopK(path, meta.name, q, k,
+      k * math.max(1, oversample), searchParam, rerank, plan, idOrdinal,
+      plan.output.indices,
+      plan.output :+ AttributeReference("_distance", DoubleType)())
+    graft.plans.AnnOptimizer.installPlanner(spark)
+    org.apache.spark.sql.GraftBridge.ofRows(spark, node)
   }
 
   /** S4 `ann_search_batch`: N queries at once → (query_idx, id, _distance).

@@ -16,15 +16,18 @@ import scala.collection.mutable.ArrayBuffer
   *  - per-LABEL insert epochs (online rewrites mix epochs in a shard);
   *  - shard routing (`probes`: shard → probing query indices; unrouted
   *    shards skip before decode);
-  *  - DAG-level partition pruning for routed searches (only the probed
-  *    shards' partitions are scheduled at all);
+  *  - DAG-level partition pruning: a routed search schedules only the
+  *    probed shards' partitions, an unrouted search on a PINNED input
+  *    only the partitions that hold a live shard;
   *  - the repeat-call layout fast path on a PINNED input: serve pure beam
   *    work without consuming the cached partition iterator when a prior
   *    call recorded the partition's (shard → epochs) layout and every
   *    needed shard is still decodable.
   *
   * Engines supply the column projection, the seg column index, decode,
-  * and the per-(shard, query) search kernel.
+  * and the per-(shard, query) search kernel. The result is the UNMERGED
+  * per-shard candidate set; the caller picks the merge (a grouped top-k
+  * shuffle for a query batch, one ordered take for a single query).
   */
 object GraphBatchSearch {
 
@@ -47,16 +50,22 @@ object GraphBatchSearch {
     * @param numShards   shard count for our own repartition sizing when
     *                    not pre-partitioned
     * @param probes      shard routing: shard id → probing query indices
+    * @param liveShards  the index's live shard ids; on a prePartitioned
+    *                    input with a known width an unrouted search
+    *                    schedules only the partitions they hash to (the
+    *                    rest of a pin's hash layout is empty by
+    *                    construction)
     * @param decode      whole-shard rows → engine shard object
     * @param search      (shard, query) → (id, distance, label) candidates
-    * @param k           merged per-query result count
+    * @return (query_idx, id, _distance, seg) candidates, unmerged
     */
   def run(spark: SparkSession, graphDf: DataFrame,
-          queries: Seq[(Int, Array[Float])], k: Int, segIdx: Int,
+          queries: Seq[(Int, Array[Float])], segIdx: Int,
           cacheKey: Option[String], prePartitioned: Boolean,
           pinnedParts: Option[Int], numShards: Int,
           codecSpill: GraphShardCache.SpillCodec,
           probes: Option[Map[Int, Array[Int]]],
+          liveShards: Option[Seq[Int]],
           decode: (Int, scala.collection.Seq[Row]) => AnyRef,
           search: (AnyRef, Array[Float]) => Iterator[(Long, Double, Int)]): DataFrame = {
     val bcQueries = spark.sparkContext.broadcast(queries)
@@ -149,17 +158,18 @@ object GraphBatchSearch {
       }
     }
 
-    // DAG-level partition pruning for routed searches: the layouts above
-    // are HashPartitioning(shard, P), so the partitions that can hold a
-    // probed shard are computable driver-side and the job schedules ONLY
-    // those. PartitionPruningRDD keeps retained parent partitions in
-    // index order, so the sorted retained set maps the pruned index back
-    // to the parent id the layout cache keys on.
-    val probedParts: Option[Set[Int]] = probes.flatMap { p =>
-      nPartsKnown.map(np =>
-        p.keysIterator.map(Vamana.shardPartitionId(_, np)).toSet)
+    // DAG-level partition pruning: the layouts above are
+    // HashPartitioning(shard, P), so the partitions that can hold a probed
+    // (routed) or live (unrouted, pinned) shard are known before the job
+    // runs, and it schedules ONLY those. PartitionPruningRDD keeps retained
+    // parent partitions in index order, so the sorted retained set maps the
+    // pruned index back to the parent id the layout cache keys on.
+    val scheduledShards: Option[Iterable[Int]] =
+      probes.map(_.keys).orElse(liveShards.filter(_ => prePartitioned))
+    val scheduledParts: Option[Set[Int]] = scheduledShards.flatMap { ids =>
+      nPartsKnown.map(np => ids.iterator.map(Vamana.shardPartitionId(_, np)).toSet)
     }
-    val perShard = probedParts match {
+    scheduledParts match {
       case Some(parts) =>
         val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
           graph.rdd, parts.contains)
@@ -172,8 +182,6 @@ object GraphBatchSearch {
           body(TaskContext.getPartitionId(), rows)
         }(Encoders.row(out))
     }
-
-    graft.operators.TopK.grouped(perShard, "query_idx", "_distance", "id", k)
   }
 
   private def cached(cacheKey: Option[String], shardId: Int,

@@ -411,23 +411,25 @@ object Hnsw {
 
   /** Batch search; see [[Vamana.searchBatch]] for the whole-shard
     * guarantee — identical contract: repartition by shard unless the caller
-    * certifies pre-partitioned input, and validate label completeness. */
+    * certifies pre-partitioned input, and validate label completeness;
+    * returns the same unmerged per-shard candidates. */
   def searchBatch(spark: SparkSession, graphDf: DataFrame,
                   queries: Seq[(Int, Array[Float])], k: Int, ef: Int,
                   metric: String, cacheKey: Option[String] = None,
                   prePartitioned: Boolean = false, numShards: Int = 0,
                   codec: Option[graft.functions.VectorCodec] = None,
                   probes: Option[Map[Int, Array[Int]]] = None,
-                  pinnedParts: Option[Int] = None): DataFrame = {
+                  pinnedParts: Option[Int] = None,
+                  liveShards: Option[Seq[Int]] = None): DataFrame = {
     val dist = VectorKernels.orderingDistance(metric) _
     // quantized datasets store codes; decode once at shard decode (cached)
     val vecColName = if (codec.isDefined) "codes" else "vector"
     val graph0 = graphDf.select("shard", "label", "id", vecColName, "level",
       "neighbors", "is_entry", "seg")
-    GraphBatchSearch.run(spark, graph0, queries, k, segIdx = 7,
+    GraphBatchSearch.run(spark, graph0, queries, segIdx = 7,
       cacheKey = cacheKey, prePartitioned = prePartitioned,
       pinnedParts = pinnedParts, numShards = numShards,
-      codecSpill = ShardSpillCodec, probes = probes,
+      codecSpill = ShardSpillCodec, probes = probes, liveShards = liveShards,
       decode = (shardId, rows) => decodeShard(shardId, rows, codec),
       search = (sh, q) => {
         val s = sh.asInstanceOf[Shard]

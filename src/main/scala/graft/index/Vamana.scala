@@ -490,53 +490,6 @@ object Vamana {
     }
   }
 
-  /** Bounded big-shard variant of [[memoDist]]: a direct-mapped pair
-    * cache (2^19 slots, 8 MB task scratch) over label-pair keys. The n×n
-    * flat memo is infeasible past [[MemoMaxRows]] (20k rows → 3.2 GB), but
-    * the online-insert workload's repeats cluster on hot pairs (the
-    * inserted points' prune pools and their reverse-edge targets'
-    * overflow prunes), which a lossy cache captures at O(1) per lookup.
-    * Collisions simply overwrite — a miss recomputes through the raw
-    * kernel, so returned values are bitwise THE raw kernel's either way
-    * and built graphs stay node-identical (VamanaSpec pins this).
-    * Serial callers only (plain arrays, not thread-safe). */
-  private[graft] def boundedMemoDist(vectors: Array[Array[Float]],
-      dist: (Array[Float], Array[Float]) => Double):
-      (Array[Float], Array[Float]) => Double = {
-    val n = vectors.length
-    val idx = new java.util.IdentityHashMap[Array[Float], Integer](n * 2)
-    var i = 0
-    while (i < n) { idx.put(vectors(i), Integer.valueOf(i)); i += 1 }
-    val cap = 1 << 19
-    val mask = cap - 1
-    val keys = new Array[Long](cap)
-    val vals = new Array[Double](cap)
-    (a, b) => {
-      val ia = idx.get(a)
-      val ib = idx.get(b)
-      if (ia == null || ib == null) dist(a, b)
-      else {
-        val x = ia.intValue(); val y = ib.intValue()
-        val lo = if (x <= y) x else y
-        val hi = if (x <= y) y else x
-        val k = ((lo.toLong << 32) | hi.toLong) + 1L // 0 = empty slot
-        // fmix64 finalizer spreads the packed pair over the table
-        var h = k
-        h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
-        h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
-        h ^= h >>> 33
-        val slot = (h & mask).toInt
-        if (keys(slot) == k) vals(slot)
-        else {
-          val v = dist(a, b)
-          keys(slot) = k
-          vals(slot) = v
-          v
-        }
-      }
-    }
-  }
-
   /** Build one shard's graph by incremental insert (DiskANN Algorithm 3). */
   def buildShard(ids: Array[Long], vectors: Array[Array[Float]],
                  params: Params, metric: String): Shard = {
@@ -748,20 +701,16 @@ object Vamana {
     // (delta batches, merge sources) skip the re-evaluated prune pairs
     // through the exact flat memo (keys on the inner array REFERENCES,
     // which insertIntoShardWith's grown copies share). Big shards keep
-    // the RAW kernel: the r19 bounded direct-mapped pair cache
-    // ([[boundedMemoDist]]) was measured on the 20k-row d64 CDC shape and
-    // REJECTED — repeat rate is only ~15% (R19MemoProbe:
-    // evals=3.13M unique=2.67M) and the wrapper ran 1.7-2.2× slower than
-    // raw (0.68-0.91 s vs 0.38-0.42 s): at d64 one eval (~65 ns) is
-    // cheaper than two IdentityHashMap gets + the mix.
+    // the RAW kernel: a bounded direct-mapped pair cache was measured on
+    // the 20k-row d64 CDC shape and rejected (~15% repeat rate, 1.7-2.2×
+    // slower than raw: one d64 eval is cheaper than the cache lookup).
     val dist =
       if (n <= MemoMaxRows) memoDist(sh.vectors ++ newVectors, raw)
       else raw
     insertIntoShardWith(sh, newIds, newVectors, params, dist)
   }
 
-  /** [[insertIntoShard]] with an explicit distance kernel — the shared
-    * body, also the probe hook (R19MemoProbe). */
+  /** [[insertIntoShard]] with an explicit distance kernel. */
   private[graft] def insertIntoShardWith(sh: Shard, newIds: Array[Long],
       newVectors: Array[Array[Float]], params: Params,
       dist: (Array[Float], Array[Float]) => Double): Shard = {
@@ -842,8 +791,9 @@ object Vamana {
   }
 
   /** Batch search: one pass over the graph dataset; each task materializes
-    * its shard group(s) once, answers every query, emits per-shard top-l;
-    * a grouped top-k merge resolves the global answer.
+    * its shard group(s) once, answers every query, emits per-shard top-l
+    * (query_idx, id, _distance, seg) candidates; the caller merges them
+    * (see [[GraphBatchSearch.run]]).
     *
     * Whole-shard guarantee: a task must see EVERY row of a shard — a
     * partial shard decodes to a graph with dangling labels and silently
@@ -855,12 +805,13 @@ object Vamana {
     * Decode additionally validates label completeness and fails loudly
     * rather than serving a truncated graph. */
   def searchBatch(spark: SparkSession, graphDf: DataFrame,
-                  queries: Seq[(Int, Array[Float])], k: Int, l: Int,
+                  queries: Seq[(Int, Array[Float])], l: Int,
                   metric: String, cacheKey: Option[String] = None,
                   prePartitioned: Boolean = false, numShards: Int = 0,
                   codec: Option[graft.functions.VectorCodec] = None,
                   probes: Option[Map[Int, Array[Int]]] = None,
-                  pinnedParts: Option[Int] = None): DataFrame = {
+                  pinnedParts: Option[Int] = None,
+                  liveShards: Option[Seq[Int]] = None): DataFrame = {
     val dist = VectorKernels.orderingDistance(metric) _
     // Quantized graph datasets store codes (sq8 u8 / fp16 halves); decode
     // ONCE at shard decode (the float arrays live in GraphShardCache) —
@@ -868,10 +819,10 @@ object Vamana {
     val vecColName = if (codec.isDefined) "codes" else "vector"
     val graph0 = graphDf
       .select("shard", "label", "id", vecColName, "neighbors", "is_entry", "seg")
-    GraphBatchSearch.run(spark, graph0, queries, k, segIdx = 6,
+    GraphBatchSearch.run(spark, graph0, queries, segIdx = 6,
       cacheKey = cacheKey, prePartitioned = prePartitioned,
       pinnedParts = pinnedParts, numShards = numShards,
-      codecSpill = ShardSpillCodec, probes = probes,
+      codecSpill = ShardSpillCodec, probes = probes, liveShards = liveShards,
       decode = (shardId, rows) => decodeShard(shardId, rows, codec),
       search = (sh, q) => {
         val s = sh.asInstanceOf[Shard]

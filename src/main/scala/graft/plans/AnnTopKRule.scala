@@ -1,16 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 import graft.functions.{CosineSimilarity, InnerProduct, L2Distance, L2DistanceSq}
-import graft.index.{AnnIndexManager, IndexMeta}
+import graft.index.AnnIndexManager
 
 /** Optimizer rewrite: `ORDER BY <distance fn>(col, const) LIMIT k` over a
   * relation with a registered ANN index → index-backed top-k scan
@@ -35,11 +34,18 @@ import graft.index.{AnnIndexManager, IndexMeta}
   * `spark.ann.minTableRows` (50), `spark.ann.maxSelectivity` (0.1),
   * `spark.ann.maxSelectivityGraph` (0.3).
   *
-  * When the rewrite fires it stamps a constant marker column
-  * `__ann_index_scan_<index>_k<k>` into the replacement subtree (dropped
-  * from the final output), so `df.explain()` shows whether the index was
-  * used — the analogue of the reference's `ANN_INDEX_SCAN (index:…, k:…)`
-  * plan label (src/ann_optimizer.cpp:509-524).
+  * The rewrite replaces `Limit(Sort(...))` with the projections between
+  * the sort and the scan, over an [[AnnIndexTopK]] leaf in place of the
+  * relation. That leaf plans to one exec which, at execution time, runs a
+  * hits job (the top k, or k×mult for a quantized index, ids and distances
+  * from the index) and then a one-task fetch job (`id IN (hits)` pushed
+  * down to the relation's scan, ordered by (distance, id), cut to k). The
+  * optimizer itself only matches the pattern and reads cached index
+  * metadata. The leaf's plan string carries the marker
+  * `__ann_index_scan_<index>_k<k>`, so `df.explain()` shows whether the
+  * index was used — the analogue of the reference's
+  * `ANN_INDEX_SCAN (index:…, k:…)` plan label
+  * (src/ann_optimizer.cpp:509-524).
   */
 case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -121,10 +127,9 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** An optimizer rule must NEVER turn a valid query into an error: any
-    * exception during rewrite construction (schema collisions with
-    * `_distance`, malformed spark.ann.* confs, unreadable index metadata,
-    * analysis failures in the replacement) means "don't rewrite", with the
-    * cause logged for diagnosis. */
+    * exception during rewrite construction (malformed spark.ann.* confs,
+    * unreadable index metadata) means "don't rewrite", with the cause
+    * logged for diagnosis. */
   private def tryRewrite(k: Int, sortExpr: Expression, direction: SortDirection,
                          sortChild: LogicalPlan): Option[LogicalPlan] =
     try doRewrite(k, sortExpr, direction, sortChild)
@@ -175,65 +180,41 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     else confDouble("spark.ann.maxSelectivity", 0.1)
     if (k > n * maxSel) return None
 
+    val idOrdinal = relation.output.indexWhere(a => conf.resolver(a.name, meta.idCol))
+    if (idOrdinal < 0) return None
+
     logInfo(s"AnnTopKRule: rewriting ORDER BY ${resolved.prettyName} " +
       s"${direction.sql} LIMIT $k to index scan " +
       s"(index=${meta.name}, engine=${meta.engine}, metric=$metricNeeded, k=$k)")
 
-    // replacement: index scan joined back to the base relation, keeping the
-    // original output attributes (exprIds preserved via aliases). The marker
-    // column makes the rewrite visible in df.explain() (dropped from output).
-    //
     // Quantized index: ADC/decoded distances pick the candidates, but the
     // user wrote an EXACT ORDER BY — overfetch k×mult and re-rank on the
     // base table's raw floats (the IndexRefineFlat pattern), so
     // quantization degrades candidate selection only, never the visible
     // ordering. mult is `spark.ann.quantizedRerankMultiplier` (4).
-    val idx = AnnIndexManager.load(spark, idxPath)
-    val base = GraftBridge.ofRows(spark, relation)
     val mult =
       if (meta.quantized) math.max(1, confInt("spark.ann.quantizedRerankMultiplier", 4))
       else 1
-    val hits = idx.scan(q, k * mult)
-    val fetched = base
-      .join(broadcast(hits), base(meta.idCol) === hits("id"))
-      .drop(hits("id"))
-    val rescored =
-      if (!meta.quantized) fetched
-      else fetched.withColumn("_distance", idx.rawDistColumn(
-        graft.functions.AnnFunctions.vector_nonnull(col(meta.vecCol)),
-        org.apache.spark.sql.functions.typedLit(idx.prepQuery(q))))
-    val joined = rescored
-      .withColumn(s"__ann_index_scan_${meta.name}_k$k", lit(true))
-      .orderBy(col("_distance"), base(meta.idCol))
-      .limit(k)
-
-    // embed the replacement fully OPTIMIZED: an analyzed subtree would leak
-    // ResolvedHint past EliminateResolvedHint and break physical planning.
-    // (No self-recursion: the replacement's sorts carry two keys, which the
-    // single-key rule pattern does not match.)
-    val newPlan = GraftBridge.optimizedPlan(joined)
-    val newOutput = newPlan.output
-    // rebuild each original output column by resolving it to an expression
-    // over the relation and remapping attribute refs (by name) into the
-    // replacement plan — computed columns (e.g. sqrt vs squared distance)
-    // keep their exact original semantics, recomputed over just k rows.
-    val projections: Seq[NamedExpression] = sortChild.output.map { oldAttr =>
-      val resolvedExpr = resolveThroughProjects(oldAttr, sortChild).getOrElse(return None)
-      val remapped = resolvedExpr.transform {
-        case a: AttributeReference =>
-          newOutput.find(_.name == a.name).getOrElse(return None)
-      }
-      Alias(remapped, oldAttr.name)(exprId = oldAttr.exprId)
-    }
-    Some(Project(projections, newPlan))
+    // the node emits only the relation columns the projections above it
+    // read (a bare relation: all), under their original exprIds — the
+    // projections then evaluate unchanged over the k fetched rows
+    val projections = sortChild.collect { case p: Project => p }
+    val needed = projections.foldLeft(AttributeSet.empty)(_ ++ _.references)
+    val columns = relation.output.indices.filter(i =>
+      projections.isEmpty || needed.contains(relation.output(i)))
+    val node = AnnIndexTopK(idxPath, meta.name, q, k, k * mult, searchParam = -1,
+      rerank = meta.quantized, relation, idOrdinal, columns, columns.map(relation.output))
+    Some(sortChild.transformUp { case r: LogicalRelation if r eq relation => node })
   }
 }
 
 /** Session-extension registration (`withExtensions`) and runtime enabling
   * for existing sessions (`spark.experimental.extraOptimizations`). */
 class AnnExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(s => AnnTopKRule(s))
+    e.injectPlannerStrategy(_ => AnnIndexTopKStrategy)
+  }
 }
 
 object AnnOptimizer {
@@ -241,8 +222,21 @@ object AnnOptimizer {
     val existing = spark.experimental.extraOptimizations
     if (!existing.exists(_.isInstanceOf[AnnTopKRule]))
       spark.experimental.extraOptimizations = existing :+ AnnTopKRule(spark)
+    installPlanner(spark)
   }
-  def disable(spark: SparkSession): Unit =
+
+  /** Register only the [[AnnIndexTopK]] planner strategy (idempotent) —
+    * what `AnnIndex.search` needs to plan its node without the rule. */
+  def installPlanner(spark: SparkSession): Unit = {
+    val existing = spark.experimental.extraStrategies
+    if (!existing.contains(AnnIndexTopKStrategy))
+      spark.experimental.extraStrategies = existing :+ AnnIndexTopKStrategy
+  }
+
+  def disable(spark: SparkSession): Unit = {
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[AnnTopKRule])
+    spark.experimental.extraStrategies =
+      spark.experimental.extraStrategies.filterNot(_ == AnnIndexTopKStrategy)
+  }
 }

@@ -469,7 +469,7 @@ object IndexQueries {
            |ORDER BY rank""".stripMargin)
     }),
 
-    // S3: fetch base columns through the broadcast join-back.
+    // S3: fetch base columns by the hit ids.
     "ann_search_fetch" -> ((s: SparkSession, dir: String) => {
       val res = flatIndex(s, dir).search(emb(s, dir), "vec_id", qvecF(7), K)
       res.withColumn("rank",

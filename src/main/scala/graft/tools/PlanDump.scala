@@ -7,8 +7,9 @@ import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md — judge-facing physical-plan evidence for the
   * headline operators. Each section documents the property that makes the
-  * plan scale (partition pruning, map-side top-k, broadcast join-back,
+  * plan scale (partition pruning, map-side top-k, row fetch by hit ids,
   * pinned shard layout, exchange reuse) next to the actual executed plan.
+  * Writes PLANS.md in the working directory (the repo root under sbt).
   *
   * Run: `sbt "runMain graft.tools.PlanDump"` (uses sf0.01 testdata).
   */
@@ -157,12 +158,19 @@ object PlanDump {
       vam.persist()
       val pinnedDf = vam.searchBatch(Seq(q), 10)
       val pinnedEx = countExchanges(pinnedDf)
+      val parts = graft.index.Vamana.shardPartitions(4)
+      val occupied = vam.meta.liveShards.get
+        .map(graft.index.Vamana.shardPartitionId(_, parts)).distinct.size
       section("pinned DISKANN batch search — no per-batch graph shuffle",
         s"persist() pins the graph dataset ALREADY hash-partitioned by `shard`, " +
           s"so a query batch reads cached shards with NO exchange of the graph " +
           s"(the only remaining exchange merges the tiny per-shard top-l rows: " +
           s"**$pinnedEx shuffle(s) pinned vs $unpinnedEx unpinned**, and the " +
           s"unpinned extra one is the defensive whole-shard repartition). " +
+          s"The search stage reads the pin through a PartitionPruningRDD " +
+          s"(`Scan ExistingRDD` below): it schedules only the **$occupied of " +
+          s"$parts** pin partitions that hold a live shard — the rest of the " +
+          s"hash layout is empty by construction. " +
           "At 100 TB this is the difference between touching cached shards and " +
           "moving the full index over the network per batch.",
         executedPlan(pinnedDf))
@@ -278,11 +286,17 @@ object PlanDump {
         .withColumn("_d", l2_distance(col("embedding"), typedLit(q)))
         .orderBy("_d").limit(10)
       section("optimizer-rewritten ORDER BY distance LIMIT k (AnnTopKRule)",
-        "AnnTopKRule replaced the full-table sort with an index scan + " +
-          "broadcast join-back; remaining sorts are over <= k rows. The same " +
-          "rule routes inner_product / cosine_similarity DESC to ip/cosine " +
-          "indexes and leaves DESC-L2 untouched.",
-        executedPlan(df))
+        "AnnTopKRule replaced the full-table sort with the projections over " +
+          "one AnnIndexTopKExec leaf. At execution it runs two jobs: the hits " +
+          "job (`AnnIndex.scan`, its plan second below: one ordered take, no " +
+          "shuffle) and the fetch job — `id IN (hits)` pushed down to the " +
+          "base table's scan, coalesced to one task that orders the k rows " +
+          "by (distance, id). No join, no broadcast, no sort over the table. " +
+          "`AnnIndex.search` (the `ann_search` TVF) plans to the same leaf. " +
+          "The same rule routes inner_product / cosine_similarity DESC to " +
+          "ip/cosine indexes and leaves DESC-L2 untouched.",
+        executedPlan(df) + "\n\n-- hits job: AnnIndex.scan(q, 10) --\n" +
+          executedPlan(graft.index.AnnIndexManager.load(spark, s"$tmp/opt").scan(q, 10)))
     }
 
     // 6. relational pushdown
@@ -777,7 +791,7 @@ object PlanDump {
         executedPlan(df))
     }
 
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"WROTE PLANS.md (${sb.length} chars)")
     spark.stop()
   }

@@ -42,12 +42,12 @@ class OptimizerSpec extends SparkSpec {
         .withColumn("_d", l2_distance(col("embedding"), typedLit(q.map(_.toDouble))))
         .orderBy("_d").limit(10)
       val plan = df.queryExecution.optimizedPlan.toString
-      // replacement signature: index-hits broadcast join carrying _distance;
-      // the only Sorts left are over <= k rows inside the replacement
-      assert(plan.contains("_distance"), s"no index scan in plan:\n$plan")
-      assert(plan.contains("Join Inner"), s"no join-back in plan:\n$plan")
-      assert(!plan.contains("l2_distance(embedding") ||
-        plan.indexOf("Join Inner") > 0, s"rewrite did not fire:\n$plan")
+      // replacement signature: the index-top-k leaf in place of the
+      // relation, and no join or sort left over it
+      assert(plan.contains("AnnIndexTopK __ann_index_scan_opt_idx_k10"),
+        s"no index-top-k node in plan:\n$plan")
+      assert(!plan.contains("Join"), s"join left in plan:\n$plan")
+      assert(!plan.contains("Sort"), s"sort left in plan:\n$plan")
       val rows = df.collect()
       assert(rows.map(_.getAs[Long]("id")).toSeq == brute(10))
       // projected distance keeps sqrt semantics (not the index's squared)
@@ -269,6 +269,190 @@ class OptimizerSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.ann.quantizedRerankMultiplier")
       AnnOptimizer.disable(spark)
+    }
+  }
+
+  // ---- the index-top-k exec: job shape, explain, re-rank, tombstones ----
+
+  /** Run `body` under a fresh job group and count the Spark jobs it
+    * starts and the shuffle bytes its stages write. */
+  private def profiled[T](body: => T): (T, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val group = s"opt-spec-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      (r, jobs.get, shuffleBytes.get)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** A private copy of the shared table and a DISKANN index registered on
+    * it (4 shards, beam wide enough to be exact on 300 rows). */
+  private def graphTable(name: String): (String, graft.index.AnnIndex) = {
+    import spark.implicits._
+    val p = s"$tmp/${name}_table.parquet"
+    vecs.toDF("id", "embedding").write.mode("overwrite").parquet(p)
+    val created = AnnIndexManager.create(spark, name, spark.read.parquet(p), "id", "embedding",
+      "DISKANN", Map("metric" -> "l2", "max_degree" -> "16", "build_complexity" -> "300",
+        "shards" -> "4", "table_path" -> p), s"$tmp/$name")
+    (p, AnnIndexManager.load(spark, created.path))
+  }
+
+  private def topkQuery(p: String, k: Int = 10) = spark.read.parquet(p)
+    .withColumn("_d", l2_distance(col("embedding"), typedLit(q.map(_.toDouble))))
+    .orderBy("_d").limit(k)
+
+  test("pinned DISKANN rewrite: two jobs (hits, fetch), no shuffle, ids equal idx.search") {
+    val (p, gidx) = graphTable("opt_pinned")
+    gidx.persist()
+    AnnOptimizer.enable(spark)
+    try {
+      val df = topkQuery(p) // the parquet schema job runs here, outside the count
+      val (rows, jobs, shuffle) = profiled(df.collect())
+      assert(jobs == 2, s"expected the hits job and the fetch job, got $jobs")
+      assert(shuffle == 0L, s"rewritten point query wrote $shuffle shuffle bytes")
+      val got = rows.map(_.getAs[Long]("id")).toSeq
+      // a codegen'd sort over the node ships its subtree to the tasks
+      val viaSearch = gidx.search(spark.read.parquet(p), "id", q, 10)
+        .orderBy(col("_distance"), col("id"))
+        .collect().map(_.getAs[Long]("id")).toSeq
+      assert(got == viaSearch)
+      assert(got == brute(10))
+    } finally {
+      AnnOptimizer.disable(spark)
+      gidx.unpersist()
+      AnnIndexManager.drop("opt_pinned")
+    }
+  }
+
+  test("explain() of a rewritten query starts no job") {
+    idx
+    AnnOptimizer.enable(spark)
+    try {
+      val df = topkQuery(tablePath)
+      val (plan, jobs, _) = profiled {
+        df.explain()
+        df.queryExecution.executedPlan.toString
+      }
+      assert(plan.contains("AnnIndexTopKExec __ann_index_scan_opt_idx_k10"), plan)
+      assert(jobs == 0, s"explain started $jobs job(s)")
+    } finally AnnOptimizer.disable(spark)
+  }
+
+  test("sq8 index: the rewrite re-ranks on raw vectors and returns the exact order") {
+    import spark.implicits._
+    val p = s"$tmp/sq8_table.parquet"
+    vecs.toDF("id", "embedding").write.mode("overwrite").parquet(p)
+    AnnIndexManager.create(spark, "opt_sq8", spark.read.parquet(p), "id", "embedding",
+      "FLAT", Map("metric" -> "l2", "quantization" -> "sq8", "table_path" -> p),
+      s"$tmp/opt_sq8")
+    AnnOptimizer.enable(spark)
+    try {
+      spark.conf.set("spark.ann.quantizedRerankMultiplier", "30") // k×30 covers the table
+      val df = topkQuery(p)
+      assert(df.queryExecution.optimizedPlan.toString.contains("__ann_index_scan_opt_sq8_k10 fetch=300 rerank"),
+        s"sq8 rewrite did not fire:\n${df.queryExecution.optimizedPlan}")
+      val rows = df.collect()
+      assert(rows.map(_.getAs[Long]("id")).toSeq == brute(10))
+      // the projected distance is the exact one, not the sq8-decoded one
+      rows.foreach { r =>
+        val exact = VectorKernels.l2(q, vecs(r.getAs[Long]("id").toInt)._2)
+        assert(math.abs(r.getAs[Double]("_d") - exact) < 1e-9)
+      }
+    } finally {
+      spark.conf.unset("spark.ann.quantizedRerankMultiplier")
+      AnnOptimizer.disable(spark)
+      AnnIndexManager.drop("opt_sq8")
+    }
+  }
+
+  test("a deleted id is never returned by the rewrite") {
+    val (p, gidx) = graphTable("opt_deleted")
+    gidx.persist()
+    val dead = brute(3)
+    gidx.delete(dead)
+    AnnOptimizer.enable(spark)
+    try {
+      val df = topkQuery(p)
+      assert(df.queryExecution.optimizedPlan.toString.contains("__ann_index_scan_opt_deleted_k10"))
+      val got = df.collect().map(_.getAs[Long]("id")).toSeq
+      assert(got.intersect(dead).isEmpty, s"deleted ids returned: ${got.intersect(dead)}")
+      assert(got == brute(13).filterNot(dead.contains))
+    } finally {
+      AnnOptimizer.disable(spark)
+      gidx.unpersist()
+      AnnIndexManager.drop("opt_deleted")
+    }
+  }
+
+  test("an unpinned graph index still answers the rewrite") {
+    val (p, gidx) = graphTable("opt_unpinned")
+    assert(!gidx.isPinned)
+    AnnOptimizer.enable(spark)
+    try {
+      val df = topkQuery(p)
+      assert(df.queryExecution.optimizedPlan.toString.contains("__ann_index_scan_opt_unpinned_k10"))
+      assert(df.collect().map(_.getAs[Long]("id")).toSeq == brute(10))
+    } finally {
+      AnnOptimizer.disable(spark)
+      AnnIndexManager.drop("opt_unpinned")
+    }
+  }
+
+  test("AnnOptimizer.disable removes both the rule and the strategy") {
+    AnnOptimizer.enable(spark)
+    AnnOptimizer.enable(spark) // idempotent
+    assert(spark.experimental.extraOptimizations.count(_.isInstanceOf[AnnTopKRule]) == 1)
+    assert(spark.experimental.extraStrategies.count(_ == AnnIndexTopKStrategy) == 1)
+    AnnOptimizer.disable(spark)
+    assert(!spark.experimental.extraOptimizations.exists(_.isInstanceOf[AnnTopKRule]))
+    assert(!spark.experimental.extraStrategies.contains(AnnIndexTopKStrategy))
+    idx
+    assert(!topkQuery(tablePath).queryExecution.optimizedPlan.toString.contains("__ann_index_scan_"))
+  }
+
+  test("duplicate base ids: every copy of a hit is fetched and counts against the limit") {
+    import spark.implicits._
+    // the index covers each id once; the registered table repeats the three
+    // nearest ids with a distinguishing tag
+    val p = s"$tmp/dup_table.parquet"
+    val dups = brute(3).toSet
+    (vecs.map { case (id, v) => (id, v, "orig") } ++
+      vecs.filter(r => dups(r._1)).map { case (id, v) => (id, v, "dup") })
+      .toDF("id", "embedding", "tag").write.mode("overwrite").parquet(p)
+    AnnIndexManager.create(spark, "opt_dup", vecs.toDF("id", "embedding"), "id", "embedding",
+      "FLAT", Map("metric" -> "l2", "table_path" -> p), s"$tmp/opt_dup")
+    AnnOptimizer.enable(spark)
+    try {
+      val df = topkQuery(p)
+      assert(df.queryExecution.optimizedPlan.toString.contains("__ann_index_scan_opt_dup_k10"))
+      val got = df.collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("tag"))).toSeq
+      // k rows: both copies of the 3 nearest, then the next 4 ids
+      assert(got.length == 10)
+      assert(got.map(_._1) == brute(3).flatMap(id => Seq(id, id)) ++ brute(7).drop(3))
+      assert(got.groupBy(_._1).filter(_._2.size == 2).values
+        .forall(_.map(_._2).sorted == Seq("dup", "orig")))
+    } finally {
+      AnnOptimizer.disable(spark)
+      AnnIndexManager.drop("opt_dup")
     }
   }
 }
