@@ -56,6 +56,9 @@ object Bench {
     // otherwise-untouched lines were exactly this)
     val spreads = mutable.LinkedHashMap.empty[String, Double]
     val reran = mutable.ArrayBuffer.empty[String]
+    // record fields that are not per-line times
+    val scalarFields = Set("n", "rc", "cpus", "sf", "value", "failed",
+      "load_1m_start", "load_1m_end", "kernel_geomean_ratio")
     // Cross-round reference: the newest committed BENCH record's per-line
     // times. The within-run spread trigger below cannot see a line that
     // times CONSISTENTLY slow inside one contention window (r14's
@@ -98,13 +101,11 @@ object Bench {
           // same stop-filter and per-match tolerance as the fallback
           // parser below: scalar fields must not seed baselines, and one
           // malformed number must not discard the whole file
-          val stop = Set("n", "rc", "cpus", "sf", "value",
-            "load_1m_start", "load_1m_end", "kernel_geomean_ratio")
           val pat = """"([A-Za-z0-9_]+)":(-?[0-9][0-9.eE+\-]*)""".r
           pat.findAllMatchIn(txt)
             .map(m => m.group(1) ->
               scala.util.Try(m.group(2).toDouble).getOrElse(-1.0))
-            .filter { case (k, v) => v > 0 && !stop(k) }.toMap
+            .filter { case (k, v) => v > 0 && !scalarFields(k) }.toMap
         }.toOption.filter(_.nonEmpty)
       val benchFiles = Option(new java.io.File(".").listFiles())
         .getOrElse(Array.empty[java.io.File])
@@ -133,12 +134,10 @@ object Bench {
             }
           }
           val body = txt.substring(0, cut)
-          val stop = Set("n", "rc", "cpus", "sf", "value",
-            "load_1m_start", "load_1m_end", "kernel_geomean_ratio")
           val pat = """\\?"([A-Za-z0-9_]+)\\?":(-?[0-9][0-9.eE+\-]*)""".r
           pat.findAllMatchIn(body)
             .map(m => m.group(1) -> scala.util.Try(m.group(2).toDouble).getOrElse(-1.0))
-            .filter { case (k, v) => v > 0 && !stop(k) }.toMap
+            .filter { case (k, v) => v > 0 && !scalarFields(k) }.toMap
         }).getOrElse(Map.empty)
     }
     val reranXround = mutable.ArrayBuffer.empty[String]
@@ -341,7 +340,7 @@ object Bench {
         idx = graft.index.AnnIndexManager.create(spark, s"bench_10k_$rep", df,
           "id", "vec", "DISKANN",
           Map("metric" -> "l2", "max_degree" -> "64", "build_complexity" -> "100",
-            "shards" -> cpus),
+            "shards" -> "8"), // fixed: the same index at every core count
           s"$tmp/b10k$rep")
       }
       val qs50 = Seq.tabulate(50)(i => {
@@ -653,6 +652,8 @@ object Bench {
       val fmt = if (k.startsWith("kernel_")) f"$v%.7f" else f"$v%.4f"
       "\"" + k + "\":" + fmt
     }.mkString("{", ",", "}")
+    // a failed line records -1.0: it is left out of the total and counted
+    val failed = times.values.count(_ < 0)
     val total = times.values.filter(_ >= 0).sum
     // contention observability: 1-min load average at start/end (a bench
     // alone on a 32-cpu box tops out near 32 DURING Spark stages and near 0
@@ -728,7 +729,7 @@ object Bench {
     // queries. JSON objects are unordered, so any parser that ever gets
     // the whole line sees the identical object. The COMPLETE record is
     // BENCH_TIMES.json below (committed with the round).
-    println(f"""{"queries":$qs,"rep_spread_gt2":$noisy,"reran_noisy":$reranJson,"reran_xround":$reranXroundJson,"xround_gt2":$xroundSlow,"host_drift":$drift,"load_1m_start":$loadStart%.2f,"load_1m_end":$loadEnd%.2f,"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir"}""")
+    println(f"""{"queries":$qs,"rep_spread_gt2":$noisy,"reran_noisy":$reranJson,"reran_xround":$reranXroundJson,"xround_gt2":$xroundSlow,"host_drift":$drift,"load_1m_start":$loadStart%.2f,"load_1m_end":$loadEnd%.2f,"metric":"total","value":$total%.3f,"unit":"sec","failed":$failed,"sf":"$sfDir"}""")
     // Dedicated machine-readable baseline for the NEXT round's cross-round
     // trigger (committed with the round's record): the driver's BENCH_r*.json
     // keeps only a ~2000-char truncated tail of the line above, so only
@@ -741,12 +742,16 @@ object Bench {
       // regex-parses into a partial baseline
       val tmpPath = java.nio.file.Paths.get("BENCH_TIMES.json.tmp")
       java.nio.file.Files.writeString(tmpPath,
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"rep_spread_gt2":$noisy,"reran_noisy":$reranJson,"reran_xround":$reranXroundJson,"xround_gt2":$xroundSlow,"host_drift":$drift,"load_1m_start":$loadStart%.2f,"load_1m_end":$loadEnd%.2f,"sf":"$sfDir"}""")
+        f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$failed,"queries":$qs,"rep_spread_gt2":$noisy,"reran_noisy":$reranJson,"reran_xround":$reranXroundJson,"xround_gt2":$xroundSlow,"host_drift":$drift,"load_1m_start":$loadStart%.2f,"load_1m_end":$loadEnd%.2f,"sf":"$sfDir"}""")
       java.nio.file.Files.move(tmpPath,
         java.nio.file.Paths.get("BENCH_TIMES.json"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[bench] $failed line(s) failed")
+      sys.exit(1)
+    }
   }
 }

@@ -58,8 +58,8 @@ import graft.pipeline.{CorpusPipeline, Dedup, TextAnalysis}
   * TABLE(...) arguments embed the analyzed child plan directly (same
   * mechanism as [[AnnSql]]); the returned relation is lazy — these are
   * plan-to-plan rewrites, not eager actions — EXCEPT dedup_components,
-  * whose iterative label propagation must run to a fixpoint and therefore
-  * executes its (bounded, label-set-sized) rounds when the plan is built,
+  * whose large-star/small-star rounds must run to a fixpoint and therefore
+  * execute (O(log n) rounds over the pair graph) when the plan is built,
   * like the reference's CALL-style functions.
   */
 object PipelineSql {
@@ -176,8 +176,9 @@ object PipelineSql {
         threshold = constNum(exprs(3))))
     }, "scala_udf")
 
-    // CALL semantics: label propagation iterates (bounded by the label
-    // set, not the corpus) while this plan is being constructed
+    // CALL semantics: the large-star/small-star rounds (O(log n), one job
+    // each, over the pair graph, not the corpus) run while this plan is
+    // being constructed
     r.createOrReplaceTempFunction("dedup_components", (exprs: Seq[Expression]) => {
       require(exprs.length == 3,
         "usage: dedup_components(TABLE(pairs), a_col, b_col)")

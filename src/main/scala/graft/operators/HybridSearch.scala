@@ -21,6 +21,16 @@ object HybridSearch {
 
   val DefaultRrfK = 60 // reference RRF_K (src/ann_search.cpp:1026)
 
+  /** BM25 parameters: the defaults of every scorer, and the values a baked
+    * impact (`contrib`, see [[bakeImpacts]]) was computed with. */
+  val Bm25K1 = 1.2
+  val Bm25B = 0.75
+
+  /** A baked `contrib` column is valid only at the parameters it was baked
+    * with. */
+  private def bakedFor(postings: DataFrame, k1: Double, b: Double): Boolean =
+    postings.columns.contains("contrib") && k1 == Bm25K1 && b == Bm25B
+
   def tokenize(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     filter(split(lower(c), "[^\\p{L}\\p{Nd}]+"), t => length(t) > 0)
 
@@ -179,7 +189,7 @@ object HybridSearch {
     * falling back to the per-call derivation. */
   private[graft] def bakeImpacts(postings: DataFrame, dfStats: DataFrame,
                                  numDocs: Long, avgDl: Double): DataFrame = {
-    val k1 = 1.2; val b = 0.75
+    val k1 = Bm25K1; val b = Bm25B
     val idfRel = dfStats.withColumn("idf",
       log((lit(numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .select("term", "idf")
@@ -196,10 +206,11 @@ object HybridSearch {
     if (postings.columns.contains("contrib")) postings.drop("contrib")
     else postings
 
-  /** BM25 (k1=1.2, b=0.75) scores for a tokenized query: only the query
-    * terms' posting lists are read. Ties broken by id for determinism. */
+  /** BM25 (k1=[[Bm25K1]], b=[[Bm25B]] by default) scores for a tokenized
+    * query: only the query terms' posting lists are read. Ties broken by id
+    * for determinism. */
   def bm25(ti: TextIndex, queryTerms: Seq[String], k: Int,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+           k1: Double = Bm25K1, b: Double = Bm25B): DataFrame = {
     val terms = queryTerms.map(_.toLowerCase).distinct
     val matched = ti.postings.filter(col("term").isin(terms: _*))
     // a MATERIALIZED index carries the per-(term, doc) BM25 impact
@@ -212,8 +223,7 @@ object HybridSearch {
     // evaluated once at build instead of per call (r19; the default-k1/b
     // contract is asserted below because the stored impact bakes them in).
     val withContrib =
-      if (matched.columns.contains("contrib") && k1 == 1.2 && b == 0.75)
-        matched
+      if (bakedFor(matched, k1, b)) matched
       else {
         // a materialized index still carries the per-term df relation:
         // identical values (postings are unique per (term, id)), one less
@@ -296,7 +306,7 @@ object HybridSearch {
     * does for plain vector search).
     *
     * Semantics per query are the scalar path's, bit-for-bit: distinct
-    * lowercased terms, BM25 (k1=1.2, b=0.75) with per-doc term
+    * lowercased terms, BM25 (k1=[[Bm25K1]], b=[[Bm25B]]) with per-doc term
     * contributions folded in sorted term order, candidate cutoffs per
     * modality, weighted RRF with absent ranks contributing 0, top-k per
     * query by (score desc, id). ONE caveat: on an IVF index built with
@@ -326,7 +336,7 @@ object HybridSearch {
     require(!base.columns.contains(queryIdCol),
       s"queryIdCol '$queryIdCol' collides with a base column")
     val spark = base.sparkSession
-    val k1 = 1.2; val b = 0.75
+    val k1 = Bm25K1; val b = Bm25B
     val qTerms = queries.select(col(queryIdCol).as("__hqid"),
       explode(array_distinct(tokenize(col(queryTextCol)))).as("term"))
     val qTermSet = qTerms.select("term").distinct()
@@ -368,7 +378,7 @@ object HybridSearch {
       // postings + a broadcast join) drops out, values bit-identical
       // (HybridSpec pins batch ≡ scalar and pruned ≡ unpruned)
       val scoredIn =
-        if (m.columns.contains("contrib")) c1
+        if (bakedFor(m, k1, b)) c1
         else c1.join(broadcast(idfSrc), "term")
           .withColumn("contrib", contribExpr(col("tf"), col("dl"), col("idf")))
       scoredIn

@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.util.LongAccumulator
 
 import scala.util.hashing.MurmurHash3
 
@@ -244,14 +248,15 @@ object Dedup {
 
   /** Candidate pairs via LSH banding: signatures split into `bands`, a
     * bucket per (band, hash-of-rows); ids sharing a bucket are candidates.
-    * `maxBucket` caps degenerate buckets (logged via `_capped` count). */
+    * `maxBucket` caps degenerate buckets (logged via `_capped` count).
+    * Rows per band come from each signature's own size (`minhashUdf`
+    * emits a fixed size), so building the plan starts no Spark job. */
   def lshCandidates(sigs: DataFrame, idCol: String, sigCol: String,
                     bands: Int, maxBucket: Int = 1000): DataFrame = {
-    val numHashes = sigs.select(size(col(sigCol))).head().getInt(0)
-    val rows = numHashes / bands
+    val rows = (size(col(sigCol)) / bands).cast("int")
     val banded = sigs.select(col(idCol), posexplode(
-      expr(s"transform(sequence(0, ${bands - 1}), " +
-        s"b -> hash(slice($sigCol, b * $rows + 1, $rows)))")).as(Seq("band", "band_hash")))
+      transform(sequence(lit(0), lit(bands - 1)),
+        b => hash(slice(col(sigCol), b * rows + 1, rows)))).as(Seq("band", "band_hash")))
     val buckets = cappedBuckets(banded, Seq("band", "band_hash"), col(idCol),
       maxBucket, "minhash_lsh").withColumnRenamed("items", "ids")
     buckets.select(explode(pairsExpr(col("ids"))).as("pair"))
@@ -1069,59 +1074,154 @@ object Dedup {
     * under-deletes transitive chains (a~b, b~c but not a~c): keeping one
     * winner per PAIR can retain both ends of an unmatched edge. Grouping
     * first, then keeping min-id per group, is the standard fix (the
-    * union-find step of MinHash dedup pipelines, run here as iterative
-    * min-label propagation — the Spark-shaped equivalent).
+    * union-find step of MinHash dedup pipelines, run here as alternating
+    * large-star/small-star — Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC 2014).
     *
-    * Scale posture: each round is one shuffle-join of the sparse edge set
-    * against the label set plus a min-aggregate, all keyed on id — no
-    * driver-side graph state; rounds needed = component diameter (near-dup
-    * chains are shallow; `maxIter` bounds adversarial corpora, and hitting
-    * it throws rather than returning silently-unconverged groups). The
-    * per-round convergence check is a driver-side scalar count.
+    * The graph is an RDD of (node, parent) pairs with parent ≤ node; a
+    * root r carries (r, r). One round is a large-star then a small-star:
+    *  - large-star, per node u over both orientations: with
+    *    m = min(N(u) ∪ {u}), emit (v, m) for every neighbour v > u, and
+    *    (u, u) when m == u;
+    *  - small-star, per node u over its parents: with m the least parent,
+    *    emit (u, m) and (x, m) for every other parent x (m's own group
+    *    emits m's pair, so no extra (m, m) marker is needed).
+    * Both keep each component's node set and its least id, and together
+    * they reach a star forest rooted at the component minimum in
+    * O(log n) rounds (a 10,000-node chain: 12–15). Large-star counts the
+    * nodes of its input that are not in star form (more than one smaller
+    * neighbour, or a smaller and a larger one) into an accumulator; a
+    * total of 0 means the input was already a star forest, so this
+    * round's output is the final labelling. Retried tasks only add, so a
+    * 0 is exact.
     *
-    * Returns (id, group_id) for every id appearing in `pairs`; isolated
+    * Scale posture: one Spark job per round — both shuffles are sorted by
+    * (node, neighbour) under one hash partitioner on the node, so each
+    * node's neighbours stream in order (no per-node buffer, spillable at
+    * any degree) — then `localCheckpoint` + `count` materializes the
+    * round and truncates its lineage. No Catalyst planning in the loop,
+    * no driver-side graph state, and no separate convergence job.
+    * `maxIter` bounds adversarial inputs; hitting it throws rather than
+    * returning unconverged groups.
+    *
+    * A null endpoint adds no edge: its non-null partner is still a node,
+    * and one (null, g) row carries the least group among the nodes paired
+    * with null (null when only null-null pairs exist).
+    *
+    * Returns (id, group_id) for every id appearing in `pairs`, typed as
+    * the pair columns (widened to one type as a union would); isolated
     * documents (no pair) are their own group by definition — union them
     * in downstream if a total mapping is needed.
     */
   def resolveComponents(pairs: DataFrame, aCol: String, bCol: String,
                         maxIter: Int = 20): DataFrame = {
-    val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    // localCheckpoint (eager) each round: an iterative plan otherwise
-    // DOUBLES its lineage per round (labels feeds both the join and the
-    // union) — by ~10 rounds the logical plan alone is exponential.
-    // Truncating to the materialized RDD keeps every round's plan O(1),
-    // the same pattern Spark's own iterative algorithms use. (On a
-    // cluster with executor churn, a reliable checkpoint dir is the
-    // durable variant; label sets here are (id, group_id) pairs — tiny
-    // relative to the corpus.)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("group_id", col("id")).localCheckpoint()
-    var it = 0
+    val spark = pairs.sparkSession
+    val sc = spark.sparkContext
+    val fwd = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+    val idField = fwd.union(fwd.select(col("b"), col("a"))).schema.head
+    val ends = fwd.select(col("a").cast(idField.dataType), col("b").cast(idField.dataType))
+    val byNode = new NodePartitioner(
+      new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    val nullPairs = sc.longAccumulator
+    val notStar = sc.longAccumulator
+    var graph: RDD[(Any, Any)] = ends.rdd.flatMap { r =>
+      val (a, b) = (r.get(0), r.get(1))
+      if (a == null || b == null) {
+        nullPairs.add(1L)
+        Option(if (a == null) b else a).map(x => (x, x))
+      } else if (IdOrder.lt(a, b)) Some((b, a))
+      else Some((a, b))
+    }
+    var rounds = 0
     var converged = false
     while (!converged) {
-      if (it >= maxIter) {
-        edges.unpersist()
+      if (rounds >= maxIter) {
+        if (rounds > 0) graph.unpersist()
         throw new IllegalStateException(
           s"resolveComponents did not converge in $maxIter rounds " +
-            "(component diameter exceeds maxIter — raise it)")
+            "(raise maxIter)")
       }
-      // one hop: every node offers its label to its neighbors; each node
-      // keeps the minimum of its own and all offered labels
-      val offered = edges.join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("group_id"))
-      val updated = labels.union(offered)
-        .groupBy("id").agg(min("group_id").as("group_id")).localCheckpoint()
-      val changed = updated.as("u").join(labels.as("l"), "id")
-        .filter(col("u.group_id") =!= col("l.group_id")).limit(1).count()
-      labels = updated
-      converged = changed == 0L
-      it += 1
+      notStar.reset()
+      val next = smallStar(largeStar(graph, byNode, notStar), byNode).localCheckpoint()
+      next.count()
+      if (rounds > 0) graph.unpersist()
+      graph = next
+      converged = notStar.value == 0L
+      rounds += 1
     }
-    edges.unpersist()
-    labels
+    val schema = StructType(Seq(idField.copy(name = "id"),
+      StructField("group_id", idField.dataType)))
+    val labels = spark.createDataFrame(graph.map { case (u, m) => Row(u, m) }, schema)
+    if (nullPairs.value == 0L) labels
+    else {
+      val nullNeighbours = ends.filter(col("a").isNull || col("b").isNull)
+        .select(coalesce(col("a"), col("b")).as("id"))
+      labels.union(nullNeighbours.join(labels, Seq("id"), "left")
+        .agg(min("group_id").as("group_id"))
+        .select(lit(null).cast(idField.dataType).as("id"), col("group_id")))
+    }
   }
+
+  /** Node ids of one column type: each boxed value is `Comparable` to its
+    * own class (Long, Integer, String, ...). */
+  private object IdOrder extends Ordering[Any] {
+    def compare(x: Any, y: Any): Int = x.asInstanceOf[Comparable[Any]].compareTo(y)
+  }
+  private implicit val edgeOrder: Ordering[(Any, Any)] = Ordering.Tuple2(IdOrder, IdOrder)
+
+  /** Places a (node, neighbour) key by its node alone, so one node's
+    * neighbours meet in one partition, sorted. */
+  private final class NodePartitioner(hash: HashPartitioner) extends Partitioner {
+    def numPartitions: Int = hash.numPartitions
+    def getPartition(key: Any): Int = hash.getPartition(key.asInstanceOf[(Any, Any)]._1)
+  }
+
+  /** Shuffle `edges` by node, sorted by (node, neighbour) with duplicate
+    * edges dropped, and stream each node with its ascending neighbours.
+    * `each` must drain the neighbours before returning the next pairs. */
+  private def byNodeSorted(edges: RDD[(Any, Any)], byNode: Partitioner)(
+      each: (Any, Iterator[Any]) => Iterator[(Any, Any)]): RDD[(Any, Any)] =
+    edges.map(e => (e, ())).repartitionAndSortWithinPartitions(byNode)
+      .mapPartitions { sorted =>
+        var last: (Any, Any) = null
+        val in = sorted.map(_._1).filter { e => val fresh = e != last; last = e; fresh }.buffered
+        new Iterator[(Any, Iterator[Any])] {
+          def hasNext: Boolean = in.hasNext
+          def next(): (Any, Iterator[Any]) = {
+            val u = in.head._1
+            (u, new Iterator[Any] {
+              def hasNext: Boolean = in.hasNext && in.head._1 == u
+              def next(): Any = in.next()._2
+            })
+          }
+        }.flatMap { case (u, nbrs) => each(u, nbrs) }
+      }
+
+  private def largeStar(graph: RDD[(Any, Any)], byNode: Partitioner,
+                        notStar: LongAccumulator): RDD[(Any, Any)] = {
+    val bothWays = graph.flatMap { case (u, p) =>
+      if (u == p) Iterator((u, u)) else Iterator((u, p), (p, u))
+    }
+    byNodeSorted(bothWays, byNode) { (u, withSelf) =>
+      val nbrs = withSelf.filter(_ != u).buffered
+      val m = if (nbrs.hasNext && IdOrder.lt(nbrs.head, u)) nbrs.head else u
+      var smaller = 0
+      var larger = false
+      nbrs.flatMap { v =>
+        if (IdOrder.lt(v, u)) { smaller += 1; None }
+        else { larger = true; Some((v, m)) }
+      } ++ {
+        if (smaller > 1 || (smaller > 0 && larger)) notStar.add(1L)
+        if (m == u) Iterator.single((u, u)) else Iterator.empty
+      }
+    }
+  }
+
+  private def smallStar(graph: RDD[(Any, Any)], byNode: Partitioner): RDD[(Any, Any)] =
+    byNodeSorted(graph, byNode) { (u, parents) =>
+      val m = parents.next()
+      Iterator.single((u, m)) ++ parents.filter(_ != u).map(x => (x, m))
+    }
 
   /** One row per duplicate group that [[resolveComponents]] found, keeping
     * the min-id representative — the group-level analogue of the exact

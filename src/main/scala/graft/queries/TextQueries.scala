@@ -335,9 +335,10 @@ object TextQueries {
         .orderBy("doc_id")),
 
     // near-dup pairs resolved into duplicate GROUPS (connected components
-    // via iterative min-label propagation): transitive chains collapse to
-    // one group id. Strict — the oracle replays the same pair predicate
-    // and takes its transitive closure with a recursive CTE.
+    // via large-star/small-star, O(log n) rounds, one job per round):
+    // transitive chains collapse to one group id. Strict — the oracle
+    // replays the same pair predicate and takes its transitive closure
+    // with a recursive CTE.
     "dedup_components" -> ((s: SparkSession, dir: String) => {
       val pairs = Dedup.ngramJaccardExact(docs(s, dir), "doc_id", "text",
         shingleSize = 2, threshold = 0.5)
@@ -1664,7 +1665,7 @@ object TextQueries {
     // the ngram_jaccard pair predicate, transitively closed by a recursive
     // CTE (reach(id, r): r reaches id through the symmetrized pair graph),
     // then MIN(reachable) = the same group representative the Spark-side
-    // label propagation converges to
+    // large-star/small-star rounds converge to
     "dedup_components" ->
       s"""$ComponentsOracleCte
         |SELECT id AS doc_id, MIN(r) AS group_id FROM reach GROUP BY id

@@ -6,6 +6,29 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session: one local SparkSession across all suites. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Run `body` under a fresh job group; returns its result and the number
+    * of Spark jobs it started. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"spec-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      (r, jobs.get)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {

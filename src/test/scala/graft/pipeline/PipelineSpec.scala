@@ -37,6 +37,21 @@ class PipelineSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 8L || p._2 == 8L))
   }
 
+  test("lshCandidates starts no Spark job; minhashNearDups pairs are unchanged") {
+    val sigs = docsDf.select(col("doc_id"),
+      Dedup.minhashUdf(64)(Dedup.shingleUdf(2)(col("text"))).as("sig"))
+    val (_, jobs) = countingJobs(Dedup.lshCandidates(sigs, "doc_id", "sig", 16))
+    assert(jobs == 0)
+    def pairs(shingleSize: Int, threshold: Double) =
+      Dedup.minhashNearDups(docsDf, "doc_id", "text", shingleSize = shingleSize,
+          threshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val same = Set((1L, 2L, 1.0), (1L, 9L, 1.0), (2L, 9L, 1.0))
+    assert(pairs(2, 0.5) == same ++ Set((1L, 3L, 0.6), (2L, 3L, 0.6), (3L, 9L, 0.6)))
+    assert(pairs(2, 0.7) == same)
+    assert(pairs(3, 0.5) == same)
+  }
+
   test("md5 minhash family agrees with the murmur family and never exceeds exact pairs") {
     // the verification family certifies the banding logic: its verified
     // pairs must be a subset of the exact all-pairs result, find the same
@@ -155,7 +170,7 @@ class PipelineSpec extends SparkSpec {
 
   test("resolveComponents: maxIter guard throws instead of returning unconverged groups") {
     import spark.implicits._
-    // a 12-node chain needs ~11 rounds for the min label to reach the tail
+    // a 12-node chain needs 5 large-star/small-star rounds
     val chain = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalStateException] {
       graft.pipeline.Dedup.resolveComponents(chain, "a", "b", maxIter = 3).collect()
