@@ -351,7 +351,7 @@ object Bench {
       // reps=5 (not the default 3): these sub-second lines are the ones a
       // few-second host-contention window can inflate end to end — r6's
       // d256 "cliff" (0.436s vs 0.181s neighbors) was exactly that; a
-      // clean re-run and graft.tools.DimProbe (flat ~500k distance evals
+      // clean re-run and a per-dim kernel probe (flat ~500k distance evals
       // at every dim, dim-proportional single-thread cost) showed the
       // search path itself is monotonic in n·d. Extra reps cost ~0.6s and
       // make the min estimator robust to one such window.

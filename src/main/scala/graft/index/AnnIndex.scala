@@ -444,8 +444,9 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     *            higher recall, more work
     * @param searchParam initial beam width (default: build complexity /
     *            ef_construction); the width cap is
-    *            `spark.ann.rangeBeamMaxWidth` (default 4096) */
-  def rangeScanBeam(q: Array[Float], radius: Double, eps: Double = 0.1,
+    *            [[AnnIndex.RangeBeamMaxWidth]] */
+  def rangeScanBeam(q: Array[Float], radius: Double,
+                    eps: Double = AnnIndex.RangeBeamEps,
                     searchParam: Int = -1): DataFrame = {
     require(isGraphEngine,
       "rangeScanBeam: graph engines only — IVF/FLAT range search is exact via rangeScan")
@@ -453,7 +454,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     val ck = shardCacheKey
     val (src, prePart) = pinnedSource
     val nShards = math.max(1, meta.param("shards", 1))
-    val maxW = spark.conf.get("spark.ann.rangeBeamMaxWidth", "4096").toInt
+    val maxW = AnnIndex.RangeBeamMaxWidth
     val res = meta.engine match {
       case "DISKANN" =>
         val p = Vamana.Params.from(meta)
@@ -487,7 +488,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     * off = exact): the batch form of [[rangeScanBeam]] on the
     * [[GraphTableSearch]] plumbing — per (shard, query) beam cost is
     * geometric in the final width, never the full-index distance scan,
-    * with `spark.ann.rangeBeamEps` (default 0.1) as the recall margin.
+    * with [[AnnIndex.RangeBeamEps]] as the recall margin.
     *
     * @param queries exactly (__qid, __qvec float[]) — already prepped
     *                (cosine-normalized, nulls handled) by the caller
@@ -496,8 +497,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     import graft.functions.AnnFunctions.l2_distance_sq
     if (isGraphEngine &&
         spark.conf.get("spark.ann.rangeBeam", "false").toBoolean)
-      return rangeBeamTable(queries, radius,
-        spark.conf.get("spark.ann.rangeBeamEps", "0.1").toDouble)
+      return rangeBeamTable(queries, radius)
     val prunable = meta.engine == "IVF" && meta.metric == "l2" &&
       centroidsDf.columns.contains("radius")
     val pairs =
@@ -526,12 +526,12 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     * @param queries exactly (__qid, __qvec float[]) — already prepped
     * @return (__qid, id, _distance), unordered */
   private[graft] def rangeBeamTable(queries: DataFrame, radius: Double,
-                                    eps: Double = 0.1,
+                                    eps: Double = AnnIndex.RangeBeamEps,
                                     searchParam: Int = -1): DataFrame = {
     require(isGraphEngine, "rangeBeamTable: graph engines only")
     val ck = shardCacheKey
     val (src, prePart) = pinnedSource
-    val maxW = spark.conf.get("spark.ann.rangeBeamMaxWidth", "4096").toInt
+    val maxW = AnnIndex.RangeBeamMaxWidth
     val res = meta.engine match {
       case "DISKANN" =>
         val p = Vamana.Params.from(meta)
@@ -690,7 +690,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     * coarse level) — value-identical to walk-all, which is what lets a
     * strict-oracle row pin the routing plumbing itself.
     *
-    * Above `spark.ann.routeCoarseThreshold` live shards (default 256) the
+    * Above [[AnnIndex.RouteCoarseThreshold]] live shards the
     * router carries a coarse cell level (see [[ShardSummaries.Router]])
     * that keeps per-query routing O(√shards × dim) — the 100 TB shape has
     * 100k+ shards, where a flat per-query centroid scan is the next
@@ -702,15 +702,9 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     * ENTRY to reuse its pinned `Broadcast[Router]` across calls. */
   private def routerEntryFor(s: Int): Option[AnnIndex.RouterCacheEntry] = {
     if (s <= 0 || !isGraphEngine) return None
-    val threshold =
-      spark.conf.get("spark.ann.routeCoarseThreshold", "256").toInt
-    val overscan =
-      spark.conf.get("spark.ann.routeOverscan", "4").toInt
     val v0 = summariesVersion.get()
     val cached = routerCache
-    if (cached != null && cached.version == v0 &&
-        cached.threshold == threshold && cached.overscan == overscan)
-      return Some(cached)
+    if (cached != null && cached.version == v0) return Some(cached)
     // the dedicated patch-base slot: the coarse GRAPH depends only on the
     // summary set, so reconciling the most recent one beats rebuilding
     // regardless of why the entry cache missed
@@ -719,9 +713,10 @@ class AnnIndex(val spark: SparkSession, val path: String) {
       // cachePath: the coarse graph persists next to summaries.bin
       // (digest-validated), so a fresh driver skips the rebuild — once
       // per summaries version, not per session
-      ShardSummaries.Router.build(covered, meta.metric, threshold, overscan,
+      ShardSummaries.Router.build(covered, meta.metric,
+        AnnIndex.RouteCoarseThreshold, AnnIndex.RouteOverscan,
         cachePath = Some(path), base = base))
-    val entry = AnnIndex.RouterCacheEntry(v0, threshold, overscan, built)
+    val entry = AnnIndex.RouterCacheEntry(v0, built)
     // store only if no invalidation landed while building — a racing
     // mutation's version bump must win (the stale router is still
     // RETURNED for this in-flight call, which read its summaries before
@@ -1179,20 +1174,6 @@ class AnnIndex(val spark: SparkSession, val path: String) {
                         batch: Option[(String, Long)]): Map[String, String] =
     params ++ batch.map { case (sid, b) => s"last_batch_id.$sid" -> b.toString }
 
-  /** Opt-in phase timing (`spark.ann.debugTiming=true`): one stderr line
-    * per phase, for decomposing mutation-path constants (the online
-    * insert's per-batch floor is a freshness-SLA budget item). */
-  private def timedPhase[T](label: String)(f: => T): T = {
-    if (!spark.conf.get("spark.ann.debugTiming", "false").toBoolean) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[ann-timing] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-  }
-
   /** Build a graph over `rows` (id, vector) honoring this index's
     * `shard_assign` mode: a spatial index keeps NEW shards spatially
     * coherent too (fresh centers trained on the batch, seeded by the
@@ -1243,7 +1224,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
 
   private def writeInsertPrepared(
       prepared: DataFrame): (Long, Map[String, String]) = {
-    val n = timedPhase("insert:prepare-count")(prepared.count())
+    val n = prepared.count()
     val segNew = currentSeg + 1
     val onlineMax =
       spark.conf.get("spark.ann.onlineInsertMaxRows", "0").toLong
@@ -1397,9 +1378,8 @@ class AnnIndex(val spark: SparkSession, val path: String) {
             }
             // modal nearest shard over the batch — one tiny job (the batch
             // is bounded by the online cap by definition)
-            val hist = timedPhase("online:spatial-targets")(
-              prepared.select(nearestCand(col("vector")).as("s"))
-                .groupBy("s").count().collect())
+            val hist = prepared.select(nearestCand(col("vector")).as("s"))
+              .groupBy("s").count().collect()
               .map(r => r.getInt(0) -> r.getLong(1))
             bcC.unpersist(false)
             val byCount = hist.sortBy { case (sid, c) => (-c, sid) }.map(_._1)
@@ -1419,8 +1399,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
       .map { case (old, i) => old -> (nextShard + i) }.toMap
     // ids at/after next_shard are unlisted by definition — reclaim any
     // crashed writer's orphans before appending under them
-    timedPhase("online:orphan-reclaim")(
-      remap.values.foreach(sid => IndexMeta.deleteDir(s"$dataPath/shard=$sid")))
+    remap.values.foreach(sid => IndexMeta.deleteDir(s"$dataPath/shard=$sid"))
     // existing graph rows of ONLY the touched shards (partition-pruned),
     // tagged by their real label; new rows ride along with label = -1.
     // Quantized (sq8/fp16) shards carry their CODES through the whole
@@ -1459,8 +1438,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
           .drop("__did", "__dseg")
       } else graphRows0.withColumn("__dead", lit(false))
     val touchedTotal =
-      if (hadDeletes) timedPhase("online:touched-count")(graphRows0.count())
-      else 0L
+      if (hadDeletes) graphRows0.count() else 0L
     // batch → target routing: hash(id) by default; a SPATIAL index routes
     // each new row to the nearest target shard's summary centroid instead,
     // so online CDC preserves the spatial coherence the routing tier
@@ -1527,8 +1505,6 @@ class AnnIndex(val spark: SparkSession, val path: String) {
       else Seq(StructField("neighbors", ArrayType(IntegerType), nullable = false))) ++
       Seq(StructField("is_entry", BooleanType, nullable = false),
         StructField("seg", LongType, nullable = false)))
-    val debugTasks =
-      spark.conf.get("spark.ann.debugTiming", "false").toBoolean
     // single-target micro-batch (the CDC shape, t=1): every row — old and
     // new — already carries the ONE target's shard value, so the hash
     // repartition would move the whole shard across a shuffle just to pick
@@ -1542,6 +1518,10 @@ class AnnIndex(val spark: SparkSession, val path: String) {
       else grouped
         .repartition(Vamana.shardPartitions(t), col("shard"))
         .sortWithinPartitions(col("shard"))
+    // t == 1 writes every row under shard=remap(targets(0)) with no shard
+    // sort, so a row of any other shard would be misfiled: checked per
+    // group in the task rather than trusted
+    val singleTarget = if (t == 1) Some(targets(0)) else None
     // Note (r19, measured): an InternalRow variant of this task (no
     // external-Row boxing on either side, LogicalRDD-wrapped write) was
     // implemented and A/B'd on the CDC bench shape — rewrite-job and
@@ -1556,9 +1536,12 @@ class AnnIndex(val spark: SparkSession, val path: String) {
         // shard group at a time — peak memory is one shard + its inserts,
         // not every hash-colocated shard's boxed rows at once (a task can
         // hold 2+ whole shards when shard ids collide in the hash)
-        var tPrev = System.nanoTime() // start of the group's row pull
         AnnIndex.groupedByIntKey(rows, _.getInt(0)).flatMap { case (old, rs) =>
-          val tGather = System.nanoTime()
+          singleTarget.foreach { target =>
+            if (old != target) throw new IllegalStateException(
+              s"online insert: the single-target rewrite of shard $target " +
+                s"received rows of shard $old")
+          }
           val (oldRows, ins) = rs.partition(_.getInt(1) >= 0)
           val segs = new Array[Long](oldRows.length)
           val deadArr = new Array[Boolean](oldRows.length)
@@ -1598,20 +1581,11 @@ class AnnIndex(val spark: SparkSession, val path: String) {
           def vecValue(vectors: Int => Array[Float],
                        allCodes: Array[Array[Byte]], label: Int): Any =
             if (allCodes != null) allCodes(label) else vectors(label).toSeq
-          def timed(tDec: Long): Unit = if (debugTasks) {
-            val tIns = System.nanoTime()
-            System.err.println(f"[ann-timing] online:task shard=$old " +
-              f"gather=${(tGather - tPrev) / 1e9}%.3f " +
-              f"decode=${(tDec - tGather) / 1e9}%.3f " +
-              f"insert=${(tIns - tDec) / 1e9}%.3f s")
-          }
-          val out: Iterator[org.apache.spark.sql.Row] = engine match {
+          engine match {
             case "HNSW" =>
               val (sh0, lmap) = Hnsw.removeFromShard(
                 Hnsw.decodeShard(old, oldRows, codecLocal), deadArr, hParams, metric)
-              val tDec = System.nanoTime()
               val sh = Hnsw.insertIntoShard(sh0, newIds, newVecs, hParams, metric)
-              timed(tDec)
               val allSegs = compact(segs, lmap) ++ ins.map(_ => segNew)
               val allCodes =
                 if (oldCodes == null) null
@@ -1625,9 +1599,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
             case _ =>
               val (sh0, lmap) = Vamana.removeFromShard(
                 Vamana.decodeShard(old, oldRows, codecLocal), deadArr, vParams, metric)
-              val tDec = System.nanoTime()
               val sh = Vamana.insertIntoShard(sh0, newIds, newVecs, vParams, metric)
-              timed(tDec)
               val allSegs = compact(segs, lmap) ++ ins.map(_ => segNew)
               val allCodes =
                 if (oldCodes == null) null
@@ -1639,39 +1611,23 @@ class AnnIndex(val spark: SparkSession, val path: String) {
                   label == sh.entry, allSegs(label))
               }
           }
-          if (!debugTasks) { tPrev = System.nanoTime(); out }
-          else new Iterator[org.apache.spark.sql.Row] {
-            private val t0 = System.nanoTime()
-            def hasNext: Boolean = {
-              val h = out.hasNext
-              if (!h) {
-                System.err.println(f"[ann-timing] online:task shard=$old " +
-                  f"emit=${(System.nanoTime() - t0) / 1e9}%.3f s")
-                tPrev = System.nanoTime()
-              }
-              h
-            }
-            def next(): org.apache.spark.sql.Row = out.next()
-          }
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
-    timedPhase("online:rewrite-job")(
-      if (t == 1)
-        // single known target: write the one shard's file straight into
-        // its hive dir — same bytes/layout as partitionBy("shard") (the
-        // partition column is never stored in the files), minus the
-        // dynamic-partitioning machinery (partition-col sort, per-dir
-        // writer tracking, partition discovery at commit)
-        rewritten.drop("shard").write.mode("append")
-          .option("parquet.enable.dictionary", "false") // §6: see create
-          .parquet(s"$dataPath/shard=${remap(targets(0))}")
-      else
-        rewritten.write.mode("append").partitionBy("shard")
-          .option("parquet.enable.dictionary", "false") // §6: see create
-          .parquet(dataPath))
-    val written = timedPhase("online:dir-listing")(
-      IndexMeta.listShardDirs(dataPath)
-        .filter(sid => sid >= nextShard && sid < nextShard + t))
+    if (t == 1)
+      // single known target: write the one shard's file straight into
+      // its hive dir — same bytes/layout as partitionBy("shard") (the
+      // partition column is never stored in the files), minus the
+      // dynamic-partitioning machinery (partition-col sort, per-dir
+      // writer tracking, partition discovery at commit)
+      rewritten.drop("shard").write.mode("append")
+        .option("parquet.enable.dictionary", "false") // §6: see create
+        .parquet(s"$dataPath/shard=${remap(targets(0))}")
+    else
+      rewritten.write.mode("append").partitionBy("shard")
+        .option("parquet.enable.dictionary", "false") // §6: see create
+        .parquet(dataPath)
+    val written = IndexMeta.listShardDirs(dataPath)
+      .filter(sid => sid >= nextShard && sid < nextShard + t)
     // with no tombstones every target re-emits (its rows are preserved
     // verbatim); with consolidation, a fully-dead shard with no routed
     // inserts legitimately vanishes from the live set
@@ -1685,8 +1641,7 @@ class AnnIndex(val spark: SparkSession, val path: String) {
       if (hadDeletes) {
         val writtenCount =
           if (written.isEmpty) 0L
-          else timedPhase("online:written-count")(
-            readGraphShards(written).count())
+          else readGraphShards(written).count()
         touchedTotal + n - writtenCount
       } else 0L
     val newLive = (live.filterNot(targets.contains) ++ written).sorted
@@ -1761,14 +1716,13 @@ class AnnIndex(val spark: SparkSession, val path: String) {
     val (n, delta0) = writeInsertData(rows, idCol, vecCol)
     val (delta, dropped, swapped, newShards) = splitOnlineMarkers(delta0)
     val (reclaimPatch, ripe) = deferReclaim(swapped)
-    timedPhase("insert:meta-publish")(publishMeta(
-      meta.copy(numVectors = meta.numVectors + n,
-        numDeleted = math.max(0L, meta.numDeleted - dropped),
-        params = reclaimPatch(withBatch(meta.params ++ delta, batch)))))
-    timedPhase("insert:reclaim-recount")(finishOnlinePublish(dropped, ripe))
-    timedPhase("insert:summaries")(updateSummariesAfterWrite(newShards, swapped))
+    publishMeta(meta.copy(numVectors = meta.numVectors + n,
+      numDeleted = math.max(0L, meta.numDeleted - dropped),
+      params = reclaimPatch(withBatch(meta.params ++ delta, batch))))
+    finishOnlinePublish(dropped, ripe)
+    updateSummariesAfterWrite(newShards, swapped)
     invalidatePin()
-    timedPhase("insert:auto-compact")(maybeAutoCompact())
+    maybeAutoCompact()
   }
 
   /** GRACE-DEFERRED space reclamation for swapped-out shard dirs. The
@@ -2374,15 +2328,31 @@ class AnnIndex(val spark: SparkSession, val path: String) {
 
 object AnnIndex {
 
+  /** Safety margin of the beam range frontier, on the ENGINE distance
+    * scale (squared-L2 for l2): larger → the beam runs farther past the
+    * query ball → higher recall, more work. */
+  val RangeBeamEps = 0.1
+
+  /** Cap on the doubling beam width of range search: a query ball denser
+    * than the cap returns the cap's nearest within-radius subset. */
+  val RangeBeamMaxWidth = 4096
+
+  /** Live-shard count above which the router builds its coarse level
+    * (see [[ShardSummaries.Router.build]], which floors it). */
+  val RouteCoarseThreshold = 256
+
+  /** Coarse-level beam width factor: the centroid graph is searched at
+    * `RouteOverscan × s` before keeping the best s shards. */
+  val RouteOverscan = 4
 
   /** Meta-param key holding grace-pending shard dirs (`sid@deadMillis`
     * CSV) awaiting deferred reclamation — see `deferReclaim`. */
   private[index] val ReclaimKey = "reclaim_pending"
 
   /** Router-cache slot: the routing decision (None = coverage gap →
-    * walk-all) pinned to the summaries version and the coarse confs it
-    * was computed under — plus the routed TABLE path's
-    * `Broadcast[Router]`, created at most once per entry. Before the pin,
+    * walk-all) pinned to the summaries version it was computed at — plus
+    * the routed TABLE path's `Broadcast[Router]`, created at most once per
+    * entry. Before the pin,
     * every `scanGraphTable` call re-broadcast the O(shards × dim) router
     * (~300 MB at 100k×d768) and never unpersisted it: a standing
     * workload (the near-dup loop is exactly repeat table searches)
@@ -2393,8 +2363,7 @@ object AnnIndex {
     * in-flight task still needs them; only `destroy()` would break that,
     * and we never destroy). */
   private[index] final case class RouterCacheEntry(
-      version: Long, threshold: Int, overscan: Int,
-      router: Option[ShardSummaries.Router]) {
+      version: Long, router: Option[ShardSummaries.Router]) {
     @volatile private var bcVar
         : org.apache.spark.broadcast.Broadcast[ShardSummaries.Router] = _
     def broadcastFor(sc: org.apache.spark.SparkContext)

@@ -133,7 +133,7 @@ object AnnIndexBuilder {
   }
 
   /** Default graph-engine shard count: bounded per-task BUILD TIME, not
-    * just memory. Empirical (tools/ShardSizing, single thread): insert cost
+    * just memory. Empirical (single-thread shard-sizing runs): insert cost
     * scales ~ n·d — 1.5 ms/insert at d=64 but ~17 ms at d=768, so a fixed
     * 100k-row shard would be a ~3 min task at d=64 yet ~30 min at d=768
     * (straggler/retry poison). Budgeting n·d ≈ 12.8M per shard (100k rows
@@ -361,9 +361,19 @@ object AnnIndexBuilder {
           System.arraycopy(cents.last._2, 0, flat, (s * ksub + c) * dsub, dsub)
       })
     }
-    futures.foreach(_.join())
+    futures.foreach(await(_))
     graft.functions.Pq.Codebooks(m, ksub, dsub, flat)
   }
+
+  /** `f.join()` that rethrows a failed future's own exception, not the
+    * CompletionException wrapping it — async work keeps the failure type
+    * its synchronous form had. */
+  def await[T](f: java.util.concurrent.CompletableFuture[T]): T =
+    try f.join()
+    catch {
+      case e: java.util.concurrent.CompletionException if e.getCause != null =>
+        throw e.getCause
+    }
 
   /** The persistence half of [[fitPq]] (see [[fitPqBooks]]). */
   def writePqBooks(spark: SparkSession,
@@ -553,6 +563,16 @@ object AnnIndexManager {
        else Map.empty[String, String])
 
     val prepared = AnnIndexBuilder.prepare(df, idCol, vecCol, metric).cache()
+    // create-time async jobs (PQ training, IVF radii): the finally joins
+    // them on EVERY path, so a failed create leaves no Spark job running
+    // behind it, and the caller sees the create's first failure
+    val pending =
+      scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.CompletableFuture[_]]
+    def async[T](body: => T): java.util.concurrent.CompletableFuture[T] = {
+      val f = java.util.concurrent.CompletableFuture.supplyAsync(() => body)
+      pending += f
+      f
+    }
     try {
       val n = prepared.count()
 
@@ -569,9 +589,8 @@ object AnnIndexManager {
       val pqBooksFut =
         if (params.get("quantization").contains("pq")) {
           val proj = AnnIndexBuilder.pqTrainProjection(prepared, dim, n, params)
-          Some(java.util.concurrent.CompletableFuture.supplyAsync(() =>
-            AnnIndexBuilder.fitPqBooksFromSample(
-              proj.collect().map(_.getSeq[Float](0).toArray), dim, params)))
+          Some(async(AnnIndexBuilder.fitPqBooksFromSample(
+            proj.collect().map(_.getSeq[Float](0).toArray), dim, params)))
         } else None
 
       // build the stored representation: sq8 fits per-dim params from the
@@ -585,7 +604,7 @@ object AnnIndexManager {
           df0.withColumn("codes",
             graft.functions.Fp16.encodeUdf(col("vector"))).drop("vector")
         case Some("pq") =>
-          val books = pqBooksFut.get.join()
+          val books = AnnIndexBuilder.await(pqBooksFut.get)
           AnnIndexBuilder.writePqBooks(spark, books, path)
           df0.withColumn("codes",
             graft.functions.Pq.encodeUdf(books)(col("vector"))).drop("vector")
@@ -615,26 +634,10 @@ object AnnIndexManager {
         // spatial: `shards` is the CENTER count; oversized cells
         // hash-split to keep every build task inside the per-task budget
         // (spatialShardAssign), so the actual shard count may exceed it
-        // opt-in build-phase timing (spark.ann.debugTiming=true), the
-        // mutation-path timedPhase convention — decomposes the spatial
-        // build premium (assignment train vs graph build+write vs
-        // create-time summaries)
-        def timedPhase[T](label: String)(f: => T): T = {
-          if (!spark.conf.get("spark.ann.debugTiming", "false").toBoolean) f
-          else {
-            val t0 = System.nanoTime()
-            val r = f
-            System.err.println(
-              f"[ann-timing] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-            r
-          }
-        }
         val (buildSrc, assignCol, buildShards) =
           if (assignMode == "spatial" && shards > 1) {
-            val (asg, total) = timedPhase("create.spatialAssign") {
-              AnnIndexBuilder.spatialShardAssign(
-                prepared, n, shards, AnnIndexBuilder.targetShardRows(dim), 42L)
-            }
+            val (asg, total) = AnnIndexBuilder.spatialShardAssign(
+              prepared, n, shards, AnnIndexBuilder.targetShardRows(dim), 42L)
             (asg, Some("__sa"), total)
           } else (prepared, None, shards)
         val graph = engine match {
@@ -665,11 +668,9 @@ object AnnIndexManager {
           // dequantize-on-access.
           val storedGraph =
             encodeStored(graph).withColumn("seg", lit(0L)) // insert epoch 0 = create
-          timedPhase("create.buildWrite") {
-            storedGraph.write.mode("overwrite").partitionBy("shard")
-              .option("parquet.enable.dictionary", "false") // §6: float/code payloads never dictionary-encode — the attempted pages are wasted write CPU (r19 R19BuildPhase A/B)
-              .parquet(s"$path/data")
-          }
+          storedGraph.write.mode("overwrite").partitionBy("shard")
+            .option("parquet.enable.dictionary", "false") // §6: float/code payloads never dictionary-encode — the attempted pages are wasted write CPU (r19 build-phase A/B)
+            .parquet(s"$path/data")
           // manifest = the dirs the build actually produced (an empty task
           // writes none); readers only ever see manifested dirs, making
           // every later mutation a copy-on-write commit (IndexMeta.liveShards)
@@ -696,9 +697,8 @@ object AnnIndexManager {
         // (no routing signal), and the pass showed up as +39% on the
         // hnsw_build_sf bench line (r15 A/B). refreshShardSummaries()
         // remains the explicit opt-in for them.
-        if (assignMode == "spatial") try timedPhase("create.summaries") {
-          idx.refreshShardSummaries()
-        } catch {
+        if (assignMode == "spatial") try idx.refreshShardSummaries()
+        catch {
           case scala.util.control.NonFatal(e) =>
             // the index is already committed and registered; summaries
             // are an optimization with a walk-all fallback — a transient
@@ -788,8 +788,7 @@ object AnnIndexManager {
           val radiiDf = assigned
             .groupBy("list_id").agg(max(dToCent(col("list_id"), col("vector"))).as("r"))
           radiiDf.queryExecution.executedPlan
-          Some(java.util.concurrent.CompletableFuture.supplyAsync(() =>
-            radiiDf.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap))
+          Some(async(radiiDf.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap))
         } else None
 
       stored.withColumn("seg", lit(0L)) // insert epoch 0 = create
@@ -799,7 +798,7 @@ object AnnIndexManager {
 
       if (engine == "IVF") {
         import spark.implicits._
-        val radii = radiiFut.get.join()
+        val radii = AnnIndexBuilder.await(radiiFut.get)
         centroids.toSeq.map { case (l, c) => (l, c, radii.getOrElse(l, 0.0)) }
           .toDF("list_id", "centroid", "radius")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
@@ -814,7 +813,10 @@ object AnnIndexManager {
       // displaced instance's pinned broadcast (put() bypasses the LRU hook)
       Option(instanceCache.put(path, idx)).foreach(_.releaseRouterBroadcast())
       idx
-    } finally prepared.unpersist()
+    } finally {
+      pending.foreach(f => scala.util.Try(f.join())) // a second failure is dropped
+      prepared.unpersist()
+    }
   }
 
   def load(spark: SparkSession, path: String): AnnIndex = {

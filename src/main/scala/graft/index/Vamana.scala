@@ -534,7 +534,7 @@ object Vamana {
     * do not see each other as candidates (the serial build's later points
     * do see earlier same-round ones); at router scale the effect on
     * routing agreement is measured at 1.000 vs the serial build
-    * (R17Scale routerbuild arm) — centroid graphs are navigated at beam
+    * (SCALE.md r17 router-build arm) — centroid graphs are navigated at beam
     * widths far above the per-round candidate loss. */
   def buildShardParallel(ids: Array[Long], vectors: Array[Array[Float]],
                          params: Params, metric: String,

@@ -26,6 +26,11 @@ object HybridSearch {
   val Bm25K1 = 1.2
   val Bm25B = 0.75
 
+  /** The max-score prune's head/cheap document-frequency cutoff, as a
+    * fraction of corpus docs (floored at 64): terms above it are "head"
+    * (bounded, not scored in phase 1). */
+  val Bm25HeadDfFraction = 0.05
+
   /** A baked `contrib` column is valid only at the parameters it was baked
     * with. */
   private def bakedFor(postings: DataFrame, k1: Double, b: Double): Boolean =
@@ -60,8 +65,8 @@ object HybridSearch {
                                * frequency (term, df) — corpus-wide, query-
                                * independent, so a MATERIALIZED index pays
                                * the df aggregation once instead of one
-                               * agg job per scalar query (r18 ABProbe
-                               * decomposition: the scalar premium is plan
+                               * agg job per scalar query (r18 A/B
+                               * decomposition, SCALE.md: the scalar premium is plan
                                * compile + per-call jobs; this removes one
                                * of each). Distributed relation — distinct-
                                * term-sized, never driver-resident. */
@@ -411,9 +416,10 @@ object HybridSearch {
     //    exact scoring is a single pass and wins below multi-million
     //    matched-posting volume, so the gate keeps small batches on the
     //    exact plan at ~zero cost (a lazy one-shot index never prunes:
-    //    headDf is what makes the gate free). `graft.tools.HybridPruneAB`
-    //    is the measured evidence on both sides: 1.11× gated-off at
-    //    n=100k (930k matched postings), 1.32× engaged at n=1M (9.3M).
+    //    headDf is what makes the gate free). The same-JVM prune A/B
+    //    (SCALE.md; its tool was last in commit f343cb7) measured both
+    //    sides: 1.11× gated-off at n=100k (930k matched postings), 1.32×
+    //    engaged at n=1M (9.3M).
     //  * Volume gate FIRST, priced off the index: the matched-posting
     //    count is an upper bound of Σ df over the query's terms, read
     //    from the driver-resident bounded [[HeadDf]] map (one tiny job
@@ -424,13 +430,13 @@ object HybridSearch {
     //    the gate probe. This mirrors the reference's cost-gated optimizer
     //    rewrites (/root/reference/src/ann_optimizer.cpp:459-472), and the
     //    default threshold sits at the measured engage-win crossover
-    //    (HybridPruneAB: forcing engagement at 930k matched postings is
+    //    (prune A/B: forcing engagement at 930k matched postings is
     //    0.79×, engaging at 9.3M is 1.32× — see SCALE.md).
     //  * When ENGAGED, the matched postings are `localCheckpoint`ed first:
     //    one scan of the (huge) postings relation, after which every
     //    consumer — term stats, phase-1 partials, both scoring branches —
     //    reads the bounded matched set, not the full inverted index (the
-    //    r10 code repeated the full scan ~5× → 0.16× by HybridPruneAB).
+    //    r10 code repeated the full scan ~5× → 0.16× by the prune A/B).
     //  * Term stats and per-query θ/expUb collect to the DRIVER — both are
     //    bounded (one row per distinct query term / per query, the same
     //    bounds as the qTermSet broadcast) — so the prunable split and the
@@ -448,16 +454,7 @@ object HybridSearch {
     lazy val fullExact = exactScore(qTerms, matchedDl, None)
     val scored = if (!pruneOn) fullExact else {
       val eps = 1e-9
-      val headDf = math.max(64L,
-        (ti.numDocs *
-          spark.conf.get("spark.ann.bm25HeadDfFraction", "0.05").toDouble).toLong)
-      val dbg = spark.conf.get("spark.ann.bm25PruneDebug", "false").toBoolean
-      def timed[T](label: String)(f: => T): T = {
-        if (!dbg) f else {
-          val t0 = System.nanoTime(); val r = f
-          println(f"[bm25prune] $label: ${(System.nanoTime() - t0) / 1e9}%.3fs"); r
-        }
-      }
+      val headDf = math.max(64L, (ti.numDocs * Bm25HeadDfFraction).toLong)
       // volume gate: one tiny job over the QUERY relation (distinct query
       // terms are vocabulary-bounded regardless of query volume, so
       // dedupe-first is safe in BOTH regimes), then a pure driver lookup
@@ -465,9 +462,9 @@ object HybridSearch {
       // is never touched when gated off. The qid probe (which decides the
       // driver-vs-distributed stats regime) lives INSIDE the engaged
       // branch below: a gated-off call must not pay a 100k-row collect.
-      val qTermArr = timed("qterms-collect")(
-        qTerms.select("term").distinct().collect().map(_.getString(0)))
-      val matchedVol = timed("vol-gate")(ti.headDf.get.volumeUpperBound(qTermArr))
+      val qTermArr =
+        qTerms.select("term").distinct().collect().map(_.getString(0))
+      val matchedVol = ti.headDf.get.volumeUpperBound(qTermArr)
       val minVol =
         spark.conf.get("spark.ann.bm25PruneMinPostings", "4000000").toLong
       // the collected term set pays for itself: downstream joins use the
@@ -483,7 +480,6 @@ object HybridSearch {
           log((lit(ti.numDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
         .select("term", "idf")
       if (matchedVol < minVol) {
-        if (dbg) println(s"[bm25prune] matchedVol=$matchedVol < minVol=$minVol — gated off")
         exactScore(qTerms, matchedLit, None, dfIdfLit)
       } else {
         // collect-bound probe (the AnnSearch.searchTable pattern): the
@@ -492,22 +488,21 @@ object HybridSearch {
         // queries) must keep them distributed. One early-terminating pass
         // decides; everything downstream branches on `driverStats`.
         val maxQ = spark.conf.get("spark.ann.maxCollectedQueries", "100000").toInt
-        val qidProbe = timed("qid-probe")(
-          queries.select(col(queryIdCol)).limit(maxQ + 1).collect())
+        val qidProbe = queries.select(col(queryIdCol)).limit(maxQ + 1).collect()
         val driverStats = qidProbe.length <= maxQ
         // the one full-postings scan: checkpoint the matched set (bounded
         // by the query terms' posting volume), then NOTHING below ever
         // touches the full inverted index again
-        val matchedCk = timed("matched-ckpt")(matchedLit.localCheckpoint())
+        val matchedCk = matchedLit.localCheckpoint()
         // per-term stats to the driver (one row per distinct matched
         // term). Matched rows are unique per (term, id) — buildTextIndex's
         // groupBy(term, id) contract — so df is a plain count: same VALUE
         // as the exact path's countDistinct, hence bit-identical idf.
         // idf is computed here with the same double-op order as the SQL
         // expression, so scores stay bit-equal to the exact plan's.
-        val termStats = timed("stats-collect")(matchedCk.groupBy("term")
+        val termStats = matchedCk.groupBy("term")
           .agg(count(lit(1)).as("df"), max("tf").as("__maxTf"), min("dl").as("__minDl"))
-          .collect())
+          .collect()
         val k1d = k1; val bd = b
         val statRows = termStats.map { r =>
           val term = r.getString(0); val df = r.getLong(1)
@@ -526,12 +521,12 @@ object HybridSearch {
         def ckExact(qt: DataFrame) = exactScore(qt, matchedCk, None, ckIdf)
         // phase 1: partial scores over cheap postings only (plain sum — used
         // only in ε-slacked inequalities, never as an output score)
-        val parts = timed("parts-ckpt")(qTerms
+        val parts = qTerms
           .join(matchedCk.join(broadcast(cheapTerms), Seq("term"), "left_semi"), "term")
           .join(broadcast(ckIdf), "term")
           .withColumn("__c", contribExpr(col("tf"), col("dl"), col("idf")))
           .groupBy("__hqid", "id").agg(sum("__c").as("part"))
-          .localCheckpoint())
+          .localCheckpoint()
         val wP = Window.partitionBy("__hqid").orderBy(col("part").desc, col("id"))
         // shared tail over a (prunableStats, exactQ) split — literal tiny
         // relations on the driver path, computed DataFrames on the
@@ -560,13 +555,11 @@ object HybridSearch {
           // per-query stats to the driver (one row per query — bounded by
           // the probe above): θ = the bm25Candidates-th cheap partial,
           // expUb = Σ head maxContrib
-          val thetaRows = timed("theta-collect")(
-            parts.withColumn("__pr", row_number().over(wP))
-              .filter(col("__pr") === bm25Candidates)
-              .select(col("__hqid"), col("part")).collect())
-          val expUbRows = timed("expub-collect")(
-            qTerms.join(broadcast(headUb), "term")
-              .groupBy("__hqid").agg(sum("maxContrib").as("expUb")).collect())
+          val thetaRows = parts.withColumn("__pr", row_number().over(wP))
+            .filter(col("__pr") === bm25Candidates)
+            .select(col("__hqid"), col("part")).collect()
+          val expUbRows = qTerms.join(broadcast(headUb), "term")
+            .groupBy("__hqid").agg(sum("maxContrib").as("expUb")).collect()
           val thetaByQ = thetaRows.map(r => r.get(0) -> r.getDouble(1)).toMap
           val expUbByQ = expUbRows.map(r => r.get(0) -> r.getDouble(1)).toMap
           // the probe already holds every qid (single-stage, no distinct
@@ -578,8 +571,6 @@ object HybridSearch {
             expUbByQ.getOrElse(q, 0.0) <
               thetaByQ.getOrElse(q, Double.NegativeInfinity) - eps
           }.toSet
-          if (dbg) println(s"[bm25prune] matchedVol=$matchedVol headDf=$headDf " +
-            s"queries=${allQ.length} prunable=${prunable.size}")
           if (prunable.isEmpty) ckExact(qTerms) else {
             import org.apache.spark.sql.types.{StructType, StructField, DoubleType}
             import org.apache.spark.sql.Row
@@ -626,9 +617,6 @@ object HybridSearch {
             .localCheckpoint() // two consumers below + the anti-join
           val exactQ = allQDf.join(prunableStats.select("__hqid"),
             Seq("__hqid"), "left_anti")
-          if (dbg) println(s"[bm25prune] matchedVol=$matchedVol headDf=$headDf " +
-            "distributed per-query stats (query count above " +
-            s"spark.ann.maxCollectedQueries=$maxQ)")
           prunedPlusExact(prunableStats, exactQ, hintPrunable = false)
         }
       }

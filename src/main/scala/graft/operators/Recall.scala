@@ -85,7 +85,8 @@ object Recall {
     *
     * @return (query_idx, hits, total, recall) ordered by query_idx */
   def rangeRecall(idx: AnnIndex, qs: Seq[Array[Float]], radius: Double,
-                  eps: Double = 0.1, searchParam: Int = -1): DataFrame = {
+                  eps: Double = AnnIndex.RangeBeamEps,
+                  searchParam: Int = -1): DataFrame = {
     val spark = idx.spark
     import spark.implicits._
     require(qs.nonEmpty, "range recall evaluation needs at least one query")
@@ -118,7 +119,8 @@ object Recall {
   /** Mean range recall over the batch — the single tuning number for
     * `eps` / the initial beam width. */
   def meanRangeRecall(idx: AnnIndex, qs: Seq[Array[Float]], radius: Double,
-                      eps: Double = 0.1, searchParam: Int = -1): Double = {
+                      eps: Double = AnnIndex.RangeBeamEps,
+                      searchParam: Int = -1): Double = {
     val r = rangeRecall(idx, qs, radius, eps, searchParam)
       .agg(avg(col("recall"))).collect()(0)
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)

@@ -201,7 +201,7 @@ object SubstrDedup {
     // `pos` for the semi-join — and ran the corpus scan + rolling-hash
     // UDF + explode once per consumer (exchange reuse cannot fire: column
     // pruning makes the two subtrees differ). WindowExec sorts each
-    // reducer slice by __h; the same-JVM A/B (R18SubstrProbe) measured
+    // reducer slice by __h; a same-JVM A/B (r18, commit f343cb7) measured
     // the sort strictly cheaper than the extra scan + exchange
     // (0.74 s vs 2.31 s old / 1.05 s shared-repartition variant).
     val pos = df

@@ -30,9 +30,9 @@ import graft.index.AnnIndexManager
   *  - a FILTER between sort and scan bails out here too, but the engine
   *    offers `AnnSearch.searchFiltered` (overfetch) as the supported path.
   *
-  * Cost gates (reference :459-472) are confs:
-  * `spark.ann.minTableRows` (50), `spark.ann.maxSelectivity` (0.1),
-  * `spark.ann.maxSelectivityGraph` (0.3).
+  * Cost gates (reference :459-472) are the constants in the companion:
+  * [[AnnTopKRule.MinTableRows]], [[AnnTopKRule.MaxSelectivity]] and
+  * [[AnnTopKRule.MaxSelectivityGraph]].
   *
   * The rewrite replaces `Limit(Sort(...))` with the projections between
   * the sort and the scan, over an [[AnnIndexTopK]] leaf in place of the
@@ -57,8 +57,6 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def confInt(key: String, default: Int): Int =
     spark.conf.getOption(key).map(_.toInt).getOrElse(default)
-  private def confDouble(key: String, default: Double): Double =
-    spark.conf.getOption(key).map(_.toDouble).getOrElse(default)
 
   /** Resolve an attribute through intervening Projects to the expression
     * that defines it; bail on Filters/joins (reference bails on FILTER,
@@ -174,10 +172,10 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     // cost gates (reference: src/ann_optimizer.cpp:459-472)
     val n = meta.numVectors
-    if (n < confInt("spark.ann.minTableRows", 50)) return None
-    val maxSel = if (meta.engine == "DISKANN")
-      confDouble("spark.ann.maxSelectivityGraph", 0.3)
-    else confDouble("spark.ann.maxSelectivity", 0.1)
+    if (n < AnnTopKRule.MinTableRows) return None
+    val maxSel =
+      if (meta.engine == "DISKANN") AnnTopKRule.MaxSelectivityGraph
+      else AnnTopKRule.MaxSelectivity
     if (k > n * maxSel) return None
 
     val idOrdinal = relation.output.indexWhere(a => conf.resolver(a.name, meta.idCol))
@@ -206,6 +204,15 @@ case class AnnTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       rerank = meta.quantized, relation, idOrdinal, columns, columns.map(relation.output))
     Some(sortChild.transformUp { case r: LogicalRelation if r eq relation => node })
   }
+}
+
+object AnnTopKRule {
+  /** A relation with fewer index rows than this is sorted, not rewritten. */
+  val MinTableRows = 50
+  /** The largest k / rows a non-graph index serves. */
+  val MaxSelectivity = 0.1
+  /** The largest k / rows a DISKANN index serves. */
+  val MaxSelectivityGraph = 0.3
 }
 
 /** Session-extension registration (`withExtensions`) and runtime enabling

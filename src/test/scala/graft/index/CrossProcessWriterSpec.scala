@@ -7,7 +7,7 @@ import java.nio.file.Files
 /** The writer contract across a REAL process boundary: the two-writer
   * ManifestSpec case serializes on the reentrant in-JVM lock, so only a
   * forked second JVM exercises the OS advisory `writer.lock` and the
-  * cross-process CAS. The child (graft.tools.CrossProcChild) is
+  * cross-process CAS. The child (graft.index.CrossProcChild) is
   * Spark-free — IndexMeta is pure java.nio — so the fork is cheap.
   *
   * r19 de-flake: the original form held the lock for a fixed 3 s and
@@ -39,7 +39,7 @@ class CrossProcessWriterSpec extends SparkSpec {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cp = System.getProperty("java.class.path")
     val pb = new ProcessBuilder(javaBin, "-cp", cp,
-      "graft.tools.CrossProcChild", path, s"@$sigFile")
+      "graft.index.CrossProcChild", path, s"@$sigFile")
     pb.redirectErrorStream(true)
     val child = pb.start()
     try {

@@ -266,4 +266,61 @@ class PqSpec extends SparkSpec {
     val got = idx.scan(q, 3).collect().map(_.getLong(0)).toSeq
     assert(got.contains(60L), s"inserted vector not found: $got")
   }
+
+  /** Runs a create expected to fail with `E`; returns, once every event
+    * posted so far is handled, the Spark jobs still active and the jobs
+    * started during or just after the call that had not ended when it
+    * returned. */
+  private def failedCreate[E <: AnyRef](create: => Any)(
+      implicit ct: scala.reflect.ClassTag[E]): (Seq[Int], Set[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val endedAt = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = started.add(j.jobId)
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = endedAt.put(j.jobId, j.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[E](create)
+      val returned = System.currentTimeMillis()
+      Thread.sleep(1000) // room for a leaked async job to start and show
+      GraftBridge.waitListenerBus(spark)
+      import scala.jdk.CollectionConverters._
+      val open = started.asScala.filterNot(id =>
+        Option(endedAt.get(id)).exists(_ <= returned)).toSet
+      (spark.sparkContext.statusTracker.getActiveJobIds().toSeq, open)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("PQ training that fails inside its async job surfaces its own exception type") {
+    import spark.implicits._
+    // a null vector reaches the training sample: the async training job
+    // throws NullPointerException, which create rethrows unwrapped
+    val rows = randVecs(40, 8, seed = 41).map { case (id, v) => (id, v.toSeq) } :+
+      (40L, null.asInstanceOf[Seq[Float]])
+    val (active, open) = failedCreate[NullPointerException] {
+      AnnIndexManager.create(spark, "pq_train_fail", rows.toDF("id", "embedding"),
+        "id", "embedding", "DISKANN",
+        Map("metric" -> "l2", "quantization" -> "pq", "shards" -> "1"),
+        s"$tmp/pq_train_fail")
+    }
+    assert(active.isEmpty && open.isEmpty)
+    // the same unwrap on the per-subspace training futures
+    intercept[NullPointerException](AnnIndexBuilder.fitPqBooksFromSample(
+      Array(Array(1f, 2f), null), 2, Map("pq_m" -> "1", "pq_ksub" -> "2")))
+  }
+
+  test("a create that fails after PQ training started leaves no Spark job running") {
+    import spark.implicits._
+    // max_degree is parsed after the training job is launched
+    val (active, open) = failedCreate[NumberFormatException] {
+      AnnIndexManager.create(spark, "pq_build_fail",
+        randVecs(2000, 16, seed = 43).toDF("id", "embedding"), "id", "embedding",
+        "DISKANN", Map("metric" -> "l2", "quantization" -> "pq",
+          "max_degree" -> "not-a-number"), s"$tmp/pq_build_fail")
+    }
+    assert(active.isEmpty, "a create-time job outlived the failed create")
+    assert(open.isEmpty, "a create-time job ended after the failed create returned")
+  }
 }
